@@ -210,6 +210,39 @@ def test_cc_star_long_chain_logarithmic_rounds(spark):
     assert comp == {i: 0 for i in range(n)}
 
 
+def test_cc_star_round_is_four_jobs(spark, monkeypatch):
+    """A join-free star round is at most 4 Spark jobs (two window
+    exchanges, one distinct exchange, the checkpoint's result stage;
+    the join-based round it replaced was 8), and every job of the call
+    runs inside a checkpoint. Counted on the scheduler's job ids, so
+    the bound is exact."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    per_ckpt = []
+    ckpt = A._ckpt_with_sig
+
+    def counted(df, *cols, **kw):
+        j0 = dag.nextJobId()
+        out = ckpt(df, *cols, **kw)
+        per_ckpt.append(dag.nextJobId() - j0)
+        return out
+
+    monkeypatch.setattr(A, "_ckpt_with_sig", counted)
+    # a path, a triangle with a tail, and an isolated edge
+    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (12, 10),
+             (12, 13), (20, 21)]
+    df = spark.createDataFrame(edges, ["a", "b"])
+    j0 = dag.nextJobId()
+    out = A.connected_components(df)
+    total = dag.nextJobId() - j0
+    init, rounds = per_ckpt[0], per_ckpt[1:]
+    assert len(rounds) >= 2
+    assert max(rounds) <= 4, per_ckpt
+    assert total == init + sum(rounds), per_ckpt
+    comp = {r["node"]: r["component"] for r in out.collect()}
+    assert comp == {**{i: 1 for i in range(1, 6)}, 10: 10, 11: 10, 12: 10,
+                    13: 10, 20: 20, 21: 20}
+
+
 def test_cc_propagation_raises_on_nonconvergence(spark):
     import pytest
 

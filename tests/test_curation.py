@@ -139,6 +139,34 @@ def test_random_project_scale_equivariance(spark):
         assert getattr(out[2], f"p{k}") == 2 * getattr(out[1], f"p{k}")
 
 
+def test_random_project_guard_survives_pruning(spark):
+    # a short vector must raise even when p0 is pruned away
+    import pytest
+
+    df = spark.createDataFrame(
+        [(1, [0.1, 0.2, 0.3]), (2, [0.5])], ["vec_id", "embedding"]
+    )
+    with pytest.raises(Exception, match="embedding dim differs"):
+        random_project(df, out_dim=4).select("p1").collect()
+
+
+def test_random_project_empty_input(spark):
+    df = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    out = random_project(df, out_dim=4)
+    assert out.columns == ["vec_id", "p0", "p1", "p2", "p3"]
+    assert out.collect() == []
+
+
+def test_vector_dim_skips_null_vectors(spark):
+    from thrill_spark.functions.embed import vector_dim
+
+    df = spark.createDataFrame(
+        [(1, None), (2, [0.5, 0.25])], "vec_id long, embedding array<double>"
+    )
+    assert vector_dim(df) == 2
+    assert vector_dim(df.filter(F.col("vec_id") == 1)) == 0
+
+
 # ---------------------------------------------------------------------------
 # key-skew report
 # ---------------------------------------------------------------------------

@@ -48,7 +48,7 @@ def test_bfs_stats(spark):
 
 
 def test_connected_components_stats(spark):
-    from thrill_spark.plans.algorithms import connected_components
+    from thrill_spark.plans.algorithms import _honest_ckpt, connected_components
 
     edges = _chain_edges(spark).select(
         F.col("src").alias("a"), F.col("dst").alias("b")
@@ -57,6 +57,15 @@ def test_connected_components_stats(spark):
         out = connected_components(edges, max_iters=40, algorithm=algo)
         assert out.count() == 24, algo
         assert _size(out) < SANE_BYTES, algo
+    # 13 rounds with plain per-round checkpoints: the join-free star
+    # round must keep the estimate near the honest input size (a 4/3
+    # per-round drift reaches 42x by the last round)
+    edges = _chain_edges(spark, n=4096).select(
+        F.col("src").alias("a"), F.col("dst").alias("b")
+    )
+    out = connected_components(edges, max_iters=40)
+    assert out.count() == 4096
+    assert _size(out) <= 16 * _size(_honest_ckpt(edges))
 
 
 def test_k_core_stats(spark):

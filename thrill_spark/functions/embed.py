@@ -99,6 +99,17 @@ def _jl_sign_py(j: int, k: int, out_dim: int) -> float:
     return 1.0 if hashlib.md5(cell).hexdigest()[0] < "8" else -1.0
 
 
+def vector_dim(df: DataFrame, vec_col: str = "embedding") -> int:
+    """Length of the first non-NULL vector in df[vec_col] (a one-row
+    probe), or 0 when there is none."""
+    head = (
+        df.where(F.col(vec_col).isNotNull())
+        .select(F.size(vec_col).alias("_d"))
+        .head(1)
+    )
+    return int(head[0]["_d"]) if head else 0
+
+
 def random_project(
     df: DataFrame,
     out_dim: int = 8,
@@ -122,12 +133,28 @@ def random_project(
     removed; at any scale the projection is a pure scan). The vector
     dim is probed from one row; rows with a different length raise
     (the fixed-dim contract every caller already relies on) instead
-    of silently projecting wrong."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    df = df.withColumn("_v", v)
+    of silently projecting wrong. An input with no non-NULL vector
+    projects with dim 0 (an empty frame gives an empty result)."""
     if dim is None:
-        head = df.select(F.size(F.col("_v")).alias("_d")).head(1)
-        dim = int(head[0]["_d"]) if head else 0
+        dim = vector_dim(df, vec_col)
+    # The dim guard lives in _v, which every projection reads, so no
+    # column pruning can drop it: raise_error unless the length
+    # matches (a NULL vector raises too). zip_with would otherwise
+    # NULL-pad a short row silently. Value-invisible when it passes.
+    df = df.withColumn(
+        "_v",
+        F.when(
+            F.size(vec_col) == dim,
+            F.transform(F.col(vec_col), lambda x: x.cast("double")),
+        ).otherwise(
+            F.raise_error(
+                F.lit(
+                    f"random_project: embedding dim differs from probed "
+                    f"{dim}; fixed-dim input required"
+                )
+            )
+        ),
+    )
 
     def _proj(k: int) -> Column:
         # zip_with over a LITERAL ±1 array + the same left-fold sum:
@@ -141,23 +168,10 @@ def random_project(
         signs = ", ".join(
             f"{_jl_sign_py(j, k, out_dim)!r}D" for j in range(dim)
         )
-        expr = (
+        return F.expr(
             f"aggregate(zip_with(_v, array({signs}), (x, s) -> x * s), "
             f"0.0D, (acc, x) -> acc + x)"
         )
-        if k == 0:
-            # One dim guard per ROW (not per projection): assert_true
-            # yields NULL when the length matches, raising otherwise.
-            # `x + 0.0 == x` bit-for-bit here because the fold starts
-            # at +0.0 and round-to-nearest cancellation never yields
-            # -0.0, so the guard is value-invisible. (zip_with would
-            # otherwise NULL-pad a short row silently.)
-            expr = (
-                f"({expr} + coalesce(cast(assert_true(size(_v) = {dim}, "
-                f"'random_project: embedding dim differs from probed {dim}; "
-                f"fixed-dim input required') as double), 0.0D))"
-            )
-        return F.expr(expr)
 
     projs = [_proj(k).alias(f"p{k}") for k in range(out_dim)]
     # keep_cols ride along so a caller needing the original vector next

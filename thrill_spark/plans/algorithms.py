@@ -40,47 +40,53 @@ def _honest_ckpt(df: DataFrame) -> DataFrame:
     return out
 
 
-def _ckpt_with_sig(df: DataFrame, *sig_cols: str):
-    """_honest_ckpt plus a (count, bit_xor(xxhash64(sig_cols))) set
+def _ckpt_with_sig(df: DataFrame, *sig_cols: str, honest: bool = True):
+    """Checkpoint plus a (count, bit_xor(xxhash64(sig_cols))) set
     signature computed BY the checkpoint's own materialization job via
     Dataset.observe (accumulator-backed CollectMetrics) — the signature
     costs ZERO extra jobs/scheduler barriers, where the previous
     per-round `agg(...).first()` paid one full job per fixpoint round
     (the "signature-from-checkpoint-write" mechanism, guide §5.4).
 
-    Ordering matters: the observe node sits ABOVE the persist (so the
-    CollectMetricsExec is in THIS action's executed plan, not hidden
-    inside the InMemoryRelation where execution-end metric collection
-    cannot see it) and BELOW the checkpoint (CollectMetrics is a row
-    pass-through, so the checkpointed rows and their honest
-    InMemoryRelation-backed stats are unchanged).
+    honest=True is _honest_ckpt with the signature: the observe node
+    sits ABOVE the persist (so the CollectMetricsExec is in THIS
+    action's executed plan, not hidden inside the InMemoryRelation
+    where execution-end metric collection cannot see it) and BELOW the
+    checkpoint (CollectMetrics is a row pass-through, so the
+    checkpointed rows and their honest InMemoryRelation-backed stats
+    are unchanged). honest=False is a plain localCheckpoint, which
+    copies the origin plan's estimate: one job fewer (no persist
+    pass), for loop rounds whose plan has no join, so the estimate
+    cannot compound (_cc_star rounds).
 
     Returns (checkpointed_df, (n, h)); h is None for an empty set
     (bit_xor over zero rows), matching the old agg semantics."""
     from pyspark.sql import Observation
 
-    cached = df.persist()
+    src = df.persist() if honest else df
     obs = Observation()
-    out = cached.observe(
+    out = src.observe(
         obs,
         F.count(F.lit(1)).alias("n"),
         F.bit_xor(F.xxhash64(*sig_cols)).alias("h"),
     ).localCheckpoint()
-    cached.unpersist()
+    if honest:
+        src.unpersist()
     m = obs.get
     return out, (m["n"], m["h"])
 
 
 def _loop_ckpt(df: DataFrame, rnd: int, every: int = 8) -> DataFrame:
-    """Collapse for LONG fixpoint loops: plain localCheckpoint per
-    round (one storage pass), with an _honest_ckpt stats reset every
-    `every`-th round to bound the compounded origin estimate. The
-    k-core lesson: a persist-backed checkpoint EVERY round costs an
-    extra block-storage pass each time (5.2 s vs 2.4 s on the k-core
-    bench graph over 7 rounds), while in-loop joins are SMJ-correct
-    at any scale — per-round honesty only pays where round joins need
-    broadcasts (suffix bucket sort, cc-star). Algorithm RETURN frames
-    still go through _honest_ckpt so consumers see honest stats
+    """Collapse for LONG fixpoint loops whose rounds JOIN: plain
+    localCheckpoint per round (one storage pass), with an _honest_ckpt
+    stats reset every `every`-th round to bound the origin estimate
+    that the round joins compound. The k-core lesson: a persist-backed
+    checkpoint EVERY round costs an extra block-storage pass each time
+    (5.2 s vs 2.4 s on the k-core bench graph over 7 rounds), while
+    in-loop joins are SMJ-correct at any scale — per-round honesty
+    only pays where round joins need broadcasts (suffix bucket sort).
+    Join-free rounds need no reset at all (_cc_star). Algorithm RETURN
+    frames still go through _honest_ckpt so consumers see honest stats
     (tests/test_stats_honesty.py)."""
     if (rnd + 1) % every == 0:
         return _honest_ckpt(df)
@@ -293,8 +299,10 @@ def connected_components(
     algorithm='star' (default, the 100 TB path): alternating
     large-star/small-star (Kiveris et al., "Connected Components in
     MapReduce and Beyond", SoCC'14), O(log^2 n) rounds on ANY graph
-    shape including long chains. Each round is two groupBy-join passes
-    hash-partitioned on node id — no broadcast, no driver data.
+    shape including long chains. Each round is two window passes
+    hash-partitioned on node id plus one distinct, with no join: 4
+    Spark jobs per round including its checkpoint, no broadcast, no
+    driver data.
 
     algorithm='propagation': min-label propagation, O(diameter) rounds.
     Near-duplicate graphs are unions of near-cliques (diameter 2-3), so
@@ -364,6 +372,21 @@ def _cc_star(edges: DataFrame, a: str, b: str, max_iters: int) -> DataFrame:
     small-star: orient edges large->small; link every smaller neighbor
     and u itself to m = min of that in-neighborhood.
 
+    A round has no join (the GraphX shape: one shuffle per message
+    step, no join back to per-vertex state). The per-node minimum is a
+    window over the node's partition, so each star step is one
+    exchange, and the round ends in one distinct: 3 exchanges, 4 jobs
+    with the checkpoint. The edge set is symmetrized by one explode
+    scan, not a union of two scans. A window, not collect_list: a hub
+    with millions of neighbors spills instead of building one giant
+    array row.
+
+    Round checkpoints are plain (_ckpt_with_sig honest=False): a
+    join-free round's estimate does not compound, because every row-
+    width change in its plan is undone by a later projection (see the
+    small-star comment), so the rounds carry the honest init
+    checkpoint's estimate (tests/test_stats_honesty.py).
+
     Convergence test: the (count, bit_xor(xxhash64)) signature of the
     edge set is compared between rounds — computed by the round's own
     checkpoint job via Dataset.observe (_ckpt_with_sig), so it costs no
@@ -376,8 +399,6 @@ def _cc_star(edges: DataFrame, a: str, b: str, max_iters: int) -> DataFrame:
     # honest init checkpoint: the caller's edge plan may carry
     # join-product size estimates (e.g. the LSH verify chain), which a
     # plain checkpoint would copy — costing round 1 its broadcasts.
-    # The signature rides the checkpoint job itself (_ckpt_with_sig):
-    # no separate per-round scalar aggregation job.
     e, prev_sig = _ckpt_with_sig(
         edges.select(F.col(a).cast("long").alias("u"), F.col(b).cast("long").alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -388,32 +409,38 @@ def _cc_star(edges: DataFrame, a: str, b: str, max_iters: int) -> DataFrame:
         "u",
         "v",
     )
+    by_u = Window.partitionBy("u")
     for _ in range(max_iters):
-        # -- large-star: symmetrize, group by u, link larger neighbors to min
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mn = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("_mv"))
-            .select("u", F.least(F.col("_mv"), F.col("u")).alias("m"))
-        )
+        # -- large-star: symmetrize in one scan, m = min(N(u) + {u}),
+        # link every larger neighbor to m (v > u >= m: already large->small)
+        sym = e.select(
+            F.explode(
+                F.array(
+                    F.struct("u", "v"),
+                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
+                )
+            ).alias("p")
+        ).select("p.u", "p.v")
         large = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mn, on="u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))  # v > u >= m
-            .distinct()
-        )
-        # -- small-star: edges already large->small; link u and all its
-        # smaller neighbors to the minimum of that in-neighborhood
-        mn2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            large.join(mn2, on="u")
+            sym.withColumn("m", F.least(F.min("v").over(by_u), F.col("u")))
+            .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(mn2.select(F.col("u"), F.col("m").alias("v")))
+        )
+        # -- small-star: link u and every smaller neighbor to the
+        # minimum m of that in-neighborhood; x >= m, so (x, m) is
+        # oriented once the x = m row is dropped. Packing (u, v) into
+        # one array column BEFORE the explode keeps the plan estimate
+        # flat: the Generate copies its child's size, and a child of
+        # (u, v, m) would grow it 4/3 per round.
+        small = (
+            large.select(
+                F.min("v").over(by_u).alias("m"), F.array("u", "v").alias("xs")
+            )
+            .select(F.explode("xs").alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
             .distinct()
         )
-        e, sig = _ckpt_with_sig(small, "u", "v")
+        e, sig = _ckpt_with_sig(small, "u", "v", honest=False)
         if sig == prev_sig:
             break
         prev_sig = sig

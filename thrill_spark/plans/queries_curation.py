@@ -597,7 +597,7 @@ def q_rp_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from thrill_spark.functions import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = emb.select(F.size("embedding").alias("_d")).head()["_d"]
+    dim = E.vector_dim(emb)
     # keep_cols carries the embedding through the projection, so the
     # bucket code and the rescore vector come out of ONE scan — the
     # previous join back to emb (an extra exchange/broadcast) is gone.

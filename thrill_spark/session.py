@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Thrill analogue: api::Run spawns hosts*workers_per_host workers
 # (thrill/api/context.cpp:947). In Spark the parallelism knob is the
 # master + shuffle partitions; everything else is the scheduler's job.
@@ -43,6 +45,16 @@ def scratch_local_dir() -> str | None:
     return os.environ.get("SPARK_GRAFT_LOCAL_DIR") or None
 
 
+# BLAS/OpenMP/numexpr pool sizes, capped per process and forwarded to
+# the Python workers.
+_THREAD_CAP_VARS = (
+    "OPENBLAS_NUM_THREADS",
+    "OMP_NUM_THREADS",
+    "MKL_NUM_THREADS",
+    "NUMEXPR_NUM_THREADS",
+)
+
+
 def _cap_native_thread_pools() -> None:
     """Pin BLAS/OpenMP pools to one thread per process (overridable via
     the env). Spark's parallelism unit is the TASK: under local[32] up
@@ -54,14 +66,24 @@ def _cap_native_thread_pools() -> None:
     deployment discipline (spark.task.cpus=1 ⇒ single-threaded
     kernels); in local mode the Python daemon inherits this process's
     environment, and on a cluster the same variables belong in
-    spark.executorEnv.* (set below for non-local masters)."""
-    for var in (
-        "OPENBLAS_NUM_THREADS",
-        "OMP_NUM_THREADS",
-        "MKL_NUM_THREADS",
-        "NUMEXPR_NUM_THREADS",
-    ):
+    spark.executorEnv.* (get_spark forwards them)."""
+    for var in _THREAD_CAP_VARS:
         os.environ.setdefault(var, "1")
+
+
+# Cap of the derived driver heap: the fixed default it replaces.
+_DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """spark.driver.memory when SPARK_GRAFT_DRIVER_MEM is unset: half
+    the host's physical memory, capped at 48g. In local mode the
+    driver JVM is also the only executor, and the Python workers and
+    the OS need the other half; a heap limit above physical memory
+    lets a large collect push the host out of memory instead of
+    failing with a Java OutOfMemoryError."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2 >> 20, _DRIVER_MEM_CAP_MB)}m"
 
 
 def get_spark(app_name: str = "thrill_spark", parallelism: int | None = None) -> SparkSession:
@@ -79,12 +101,10 @@ def get_spark(app_name: str = "thrill_spark", parallelism: int | None = None) ->
     p = parallelism or default_parallelism()
     builder = (
         SparkSession.builder.master(f"local[{p}]")
-        .config("spark.executorEnv.OPENBLAS_NUM_THREADS",
-                os.environ["OPENBLAS_NUM_THREADS"])
-        .config("spark.executorEnv.OMP_NUM_THREADS",
-                os.environ["OMP_NUM_THREADS"])
-        .config("spark.executorEnv.MKL_NUM_THREADS",
-                os.environ["MKL_NUM_THREADS"])
+        # The package's parent directory on the workers' path: a client
+        # that imports thrill_spark through sys.path (PYTHONPATH unset)
+        # ships functions the workers must be able to unpickle.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(p))
         .config("spark.default.parallelism", str(p))
@@ -94,11 +114,14 @@ def get_spark(app_name: str = "thrill_spark", parallelism: int | None = None) ->
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    for var in _THREAD_CAP_VARS:
+        builder = builder.config(f"spark.executorEnv.{var}", os.environ[var])
     local_dir = scratch_local_dir()
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
