@@ -60,3 +60,52 @@ def test_plan_lint(spark, name):
         assert pat not in plan, f"{name}: {pat} in executed plan"
     viol = _single_partition_violations(plan)
     assert not viol, f"{name}: non-scalar single-partition funnel:\n" + "\n".join(viol)
+
+
+# Modules allowed to call createDataFrame: the Arrow local-relation
+# helper itself and the user-facing ingestion (collections with
+# inferred or nested schemas). Every other driver-built table goes
+# through session.local_frame, so none of them starts a Python worker.
+_CREATE_DATAFRAME_ALLOWED = {"session.py": {"local_frame"}, "api.py": None, "sources/io.py": None}
+
+
+def _create_dataframe_calls(tree):
+    """(enclosing function name or None, line) of every
+    `<expr>.createDataFrame(...)` call in a module AST."""
+    import ast
+
+    out = []
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+        ):
+            out.append((fn, node.lineno))
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, None)
+    return out
+
+
+def test_driver_tables_are_local_relations():
+    import ast
+    import pathlib
+
+    import thrill_spark
+
+    root = pathlib.Path(thrill_spark.__file__).parent
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for fn, line in _create_dataframe_calls(ast.parse(path.read_text())):
+            if rel in _CREATE_DATAFRAME_ALLOWED:
+                allowed = _CREATE_DATAFRAME_ALLOWED[rel]
+                if allowed is None or fn in allowed:
+                    continue
+            bad.append(f"{rel}:{line} (in {fn})")
+    assert not bad, "createDataFrame outside session.local_frame:\n" + "\n".join(bad)

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from thrill_spark.session import local_frame
+
 _Q_LEVELS = 127  # symmetric int8 range [-127, 127]
 
 
@@ -235,9 +237,7 @@ def power_iteration_top_component(
         raise ValueError(
             f"power_iteration_top_component: no non-empty '{vec_col}' vectors"
         )
-    v = spark.createDataFrame(
-        [(j, quant) for j in range(dims)], ["dim", "val"]
-    )
+    v = local_frame(spark, [(j, quant) for j in range(dims)], "dim long, val long")
     for _ in range(iterations):
         u = (
             x.join(F.broadcast(v), "dim")

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from thrill_spark.session import local_frame
+
 
 def _fold_sum(arr: Column) -> Column:
     """Sequential left-fold sum of an array<double> (deterministic FP)."""
@@ -322,8 +324,8 @@ def cosine_near_dup_pairs(
     grid = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
     # Two independent copies of the tiny grid avoid the ambiguous-self-
     # join trap when the cogroup recombines the two replicated sides.
-    bpairs_a = spark.createDataFrame(grid, "ba int, bb int")
-    bpairs_b = spark.createDataFrame(grid, "ba int, bb int")
+    bpairs_a = local_frame(spark, grid, "ba int, bb int")
+    bpairs_b = local_frame(spark, grid, "ba int, bb int")
     # a-side: rows of block ba in every pair (ba, bb); b-side: rows of bb.
     a_rep = tagged.join(F.broadcast(bpairs_a), tagged["_blk"] == bpairs_a["ba"]).select(
         "ba", "bb", F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
@@ -434,9 +436,10 @@ def ivf_centroids(df: DataFrame, n_cells: int | None, vec_col: str = "embedding"
             mask = a == ci
             if mask.any():
                 cents[ci] = X[mask].mean(axis=0)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(ci, [float(x) for x in cents[ci]]) for ci in range(len(cents))],
-        ["cell_id", "centroid"],
+        "cell_id long, centroid array<double>",
     )
 
 
@@ -585,8 +588,8 @@ def knn_join(
         F.col(right_id).alias("neighbor_id"), F.col(vec_col).alias("_v")
     ).withColumn("_br", F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(br)).cast("int"))
     grid = [(i, j) for i in range(bl) for j in range(br)]
-    grid_a = spark.createDataFrame(grid, "ga int, gb int")
-    grid_b = spark.createDataFrame(grid, "ga int, gb int")
+    grid_a = local_frame(spark, grid, "ga int, gb int")
+    grid_b = local_frame(spark, grid, "ga int, gb int")
     l_rep = ltag.join(F.broadcast(grid_a), ltag["_bl"] == grid_a["ga"]).select(
         "ga", "gb", "query_id", "_v"
     )

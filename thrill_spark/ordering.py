@@ -43,7 +43,10 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, LongType, StructField, StructType
 from pyspark.storagelevel import StorageLevel
+
+from thrill_spark.session import local_frame
 
 IDX = "_idx"
 _PID = "_ts_pid"
@@ -228,6 +231,7 @@ def _order_partitioned(df: DataFrame, order_by: Sequence[str | Column], persist:
 def _with_carry(
     part: DataFrame,
     mapping: dict[int, object],
+    value_type: DataType = LongType(),
     name: str = _CARRY,
     key: str = _PID,
 ) -> DataFrame:
@@ -235,16 +239,17 @@ def _with_carry(
 
     Small maps inline as a create_map of literals (cheapest to analyze);
     past OFFSET_LITERAL_MAX partitions the map rides in as a
-    broadcast-joined offsets DataFrame so plan size stays O(1) in the
-    partition count."""
+    broadcast-joined local relation of (key long, name value_type) so
+    plan size stays O(1) in the partition count."""
     if not mapping:
         return part.withColumn(name, F.lit(None))
     if len(mapping) <= OFFSET_LITERAL_MAX:
         m = F.create_map(*[F.lit(x) for kv in mapping.items() for x in kv])
         return part.withColumn(name, m[F.col(key)])
-    spark = part.sparkSession
-    odf = spark.createDataFrame(
-        [(int(k), v) for k, v in mapping.items()], [key, name]
+    odf = local_frame(
+        part.sparkSession,
+        [(int(k), v) for k, v in mapping.items()],
+        StructType([StructField(key, LongType()), StructField(name, value_type)]),
     )
     return part.join(F.broadcast(odf), on=key, how="left")
 
@@ -311,10 +316,8 @@ def prefix_scan(
     val = F.col(value) if isinstance(value, str) else value
     cols = _cols(order_by)
     part, keycol = _order_partitioned(df, order_by, persist)
-    totals = {
-        r[keycol]: r["tot"]
-        for r in part.groupBy(keycol).agg(agg_fn(val).alias("tot")).collect()
-    }
+    tot = part.groupBy(keycol).agg(agg_fn(val).alias("tot"))
+    totals = {r[keycol]: r["tot"] for r in tot.collect()}
     pids = sorted(totals)
     if combine_scalar is not None:
         offsets: dict[int, object] = {}
@@ -335,7 +338,7 @@ def prefix_scan(
         carried = F.col(_CARRY)
         local = F.when(carried.isNull(), local).otherwise(combine_fn(carried, local))
         return (
-            _with_carry(part, nonnull, key=keycol)
+            _with_carry(part, nonnull, tot.schema["tot"].dataType, key=keycol)
             .withColumn(name, local)
             .drop(keycol, _CARRY)
         )
@@ -399,10 +402,8 @@ def prefix_sum(
     val = F.col(value) if isinstance(value, str) else value
     cols = _cols(order_by)
     part, keycol = _order_partitioned(df, order_by, persist)
-    totals = {
-        r[keycol]: r["tot"]
-        for r in part.groupBy(keycol).agg(F.sum(val).alias("tot")).collect()
-    }
+    tot = part.groupBy(keycol).agg(F.sum(val).alias("tot"))
+    totals = {r[keycol]: r["tot"] for r in tot.collect()}
     offsets: dict[int, object] = {}
     running = None
     for pid in sorted(totals):
@@ -416,7 +417,7 @@ def prefix_sum(
         local = F.coalesce(local, F.lit(0))
     nonnull = {k: v for k, v in offsets.items() if v is not None}
     if nonnull:
-        part = _with_carry(part, nonnull, key=keycol)
+        part = _with_carry(part, nonnull, tot.schema["tot"].dataType, key=keycol)
         local = local + F.coalesce(F.col(_CARRY), F.lit(0))
     out = local
     if initial is not None:

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from thrill_spark.session import local_frame
+
 
 def _honest_ckpt(df: DataFrame) -> DataFrame:
     """localCheckpoint with HONEST planner stats — the Collapse
@@ -257,7 +259,7 @@ def bfs(edges: DataFrame, source: int, max_iters: int = 25,
     is one equi-join + one anti-join. localCheckpoint per round is the
     Collapse analogue keeping lineage flat."""
     spark = edges.sparkSession
-    dist = spark.createDataFrame([(source, 0)], "node long, d int").localCheckpoint()
+    dist = local_frame(spark, [(source, 0)], "node long, d int")
     frontier = dist
     for i in range(1, max_iters + 1):
         nxt = (
@@ -570,22 +572,23 @@ def doc_offsets(
         for i, ln in srt:
             out.append((i, acc, ln))
             acc += ln
-        # PySpark createDataFrame parallelizes to an RDD-backed plan
-        # (LogicalRDD) whose default size statistic is Long.Max; that
-        # estimate MULTIPLIES through every downstream join, so the
-        # whole consumer cascade silently loses broadcast eligibility
-        # (the r15 full-suite shuffle-budget failure on
-        # dedup_exact_substr_clean/coverage: 3 -> 6 wide shuffles, SMJ
-        # where r13 broadcast). One tiny honest checkpoint (coalesce(1)
-        # so the materialization is a single task over ≤ driver_max
-        # rows) restores actual-bytes stats; the broadcast hint makes
-        # the intent explicit where offs sits on a broadcastable side.
+        # A local relation carries its actual size: the consumer
+        # cascade keeps broadcast eligibility with no checkpoint job (a
+        # Long.Max size estimate multiplies through every downstream
+        # join — the r15 ExactSubstr shuffle-budget failure). The
+        # broadcast hint makes the intent explicit where offs sits on
+        # a broadcastable side. coalesce(1): a local relation scans as
+        # up to leafNodeDefaultParallelism tasks, and the consumers
+        # that scan offs rather than broadcast it (_chunk_for's
+        # average, _label_doc's span explode) then pay a task per
+        # slice and an exchange; one partition keeps them single-task
+        # stages.
         offs = F.broadcast(
-            _honest_ckpt(
-                lens.sparkSession.createDataFrame(
-                    out, f"{id_col} long, {off_col} long, {len_col} long"
-                ).coalesce(1)
-            )
+            local_frame(
+                lens.sparkSession,
+                out,
+                f"{id_col} long, {off_col} long, {len_col} long",
+            ).coalesce(1)
         )
         return offs, acc
     offs = O.prefix_sum(
@@ -684,15 +687,14 @@ def suffix_array(
     # broadcast hash join with no shuffle. A pathological alphabet
     # falls back to the distributed path.
     hist = chars.groupBy("ch").agg(F.count("*").alias("_c"))
-    # Sort with the SAME collation Spark's distributed fallback uses
-    # (UTF-8 binary order): Python's default code-point sort agrees for
-    # well-formed strings, but split(text,'') can yield lone UTF-16
-    # surrogates on astral-plane text, where the two gated paths would
-    # rank characters differently (ADVICE r14).
+    # Python's code-point order is the UTF-8 binary order Spark's
+    # distributed fallback sorts by, for well-formed strings.
+    # split(text,'') yields whole code points on astral-plane text, and
+    # the ranks reach the JVM through Arrow, which raises on a lone
+    # UTF-16 surrogate rather than mis-ranking it.
     hrows = sorted(
-        ((r["ch"], int(r["_c"]))
-         for r in hist.limit(_SA_ALPHA_DRIVER_MAX + 1).collect()),
-        key=lambda t: t[0].encode("utf-8", "surrogatepass"),
+        (r["ch"], int(r["_c"]))
+        for r in hist.limit(_SA_ALPHA_DRIVER_MAX + 1).collect()
     )
     if len(hrows) > _SA_ALPHA_DRIVER_MAX:
         alpha_ranked = O.prefix_sum(
@@ -705,7 +707,7 @@ def suffix_array(
             pairs.append((ch, acc))
             acc += c
         alpha_ranked = F.broadcast(
-            chars.sparkSession.createDataFrame(pairs, "ch string, r long")
+            local_frame(chars.sparkSession, pairs, "ch string, r long")
         )
     # honest checkpoint: this is ALSO the descent's level-1 rank table
     # (a join-product estimate here would cost it broadcast eligibility)
@@ -1286,7 +1288,7 @@ def sssp(
     Returns (node, dist) with exact integer distances.
     """
     spark = edges.sparkSession
-    dist = spark.createDataFrame([(source, 0)], "node long, dist long").localCheckpoint()
+    dist = local_frame(spark, [(source, 0)], "node long, dist long")
     prev = (1, 0)
     for i in range(max_iters):
         cand = (
@@ -1385,9 +1387,7 @@ def _dc3_base(spark, s: DataFrame, n: int) -> DataFrame:
     rank = [0] * n
     for rk, p in enumerate(order):
         rank[p] = rk
-    return spark.createDataFrame(
-        [(p, rank[p]) for p in range(n)], "pos long, r long"
-    )
+    return local_frame(spark, [(p, rank[p]) for p in range(n)], "pos long, r long")
 
 
 def _dc3_rec(spark, s: DataFrame, n: int, base_threshold: int) -> DataFrame:
@@ -1578,8 +1578,8 @@ def _dc7_rec(spark, s: DataFrame, n: int, base_threshold: int) -> DataFrame:
     if n <= base_threshold:
         return _dc3_base(spark, s, n)
 
-    pad = spark.createDataFrame(
-        [(n + j, -(j + 1)) for j in range(14)], "pos long, sym long"
+    pad = local_frame(
+        spark, [(n + j, -(j + 1)) for j in range(14)], "pos long, sym long"
     )
     P = _honest_ckpt(s.unionByName(pad))
 
@@ -1816,7 +1816,7 @@ def strongly_connected_components(
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
     )
-    out = spark.createDataFrame([], "node long, scc_id long")
+    out = local_frame(spark, [], "node long, scc_id long")
     for _ in range(max_rounds):
         if nodes.isEmpty():
             return out

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from thrill_spark.catalog import load_table, scratch_dir
 from thrill_spark.plans import algorithms as A
 from thrill_spark.plans.queries import query
+from thrill_spark.session import local_frame
 from thrill_spark.sources import io as IO
 
 
@@ -40,7 +41,7 @@ def _edges(spark: SparkSession, sf_dir: str, mod: int = 200) -> DataFrame:
 )
 def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = A.triangle_count(_edges(spark, sf_dir))
-    return spark.createDataFrame([(n,)], "n_triangles long")
+    return local_frame(spark, [(n,)], "n_triangles long")
 
 
 # PageRank ranks are order-dependent FP sums, so the values themselves
@@ -147,7 +148,7 @@ def q_logreg_sgd(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kth(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     v = A.kth_statistic(orders, "o_totalprice", 99)
-    return spark.createDataFrame([(float(v),)], "kth_value double")
+    return local_frame(spark, [(float(v),)], "kth_value double")
 
 
 # ---------------------------------------------------------------------------

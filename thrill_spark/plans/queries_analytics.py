@@ -31,6 +31,7 @@ from thrill_spark.functions import text as TX
 from thrill_spark.plans import algorithms as A
 from thrill_spark.plans.queries import query
 from thrill_spark.plans.queries_llm import SQL_TOKS
+from thrill_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Theta-sketch set operations: per-event-type KMV/theta sketches, then
@@ -450,7 +451,7 @@ def q_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY the rows of the target buckets, keyed by q — at 100 TB you
     would recurse the refinement on a narrower width instead of one
     in-bucket window."""
-    qdf = spark.createDataFrame([(q,) for q in _HQ_QS], "q_permille long")
+    qdf = local_frame(spark, [(q,) for q in _HQ_QS], "q_permille long")
     ev = load_table(spark, sf_dir, "events")
     c = ev.select(F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"))
     # The ~max_cents/W-row sketch is referenced by the cumsum (twice),
@@ -946,13 +947,47 @@ def _fm_ranges_frame(
     when they don't (cum is None)."""
     if cum is not None:
         state = _fm_backward_search(idx_df, ctab, cum, n1, patterns)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(p, lo, hi) for p, (lo, hi) in state.items()],
             "pat string, lo long, hi long",
         )
-    probes = spark.createDataFrame([(p,) for p in patterns], "pat string")
+    probes = local_frame(spark, [(p,) for p in patterns], "pat string")
     return _fm_backward_search_frame(
         idx_df, _fm_cum_df(spark, idx_path), ctab, n1, probes
+    )
+
+
+def _fm_literal_hits(
+    spark: SparkSession,
+    idx_df: DataFrame,
+    n1: int,
+    ctab: dict[str, int],
+    cum: dict[tuple[str, int], int],
+    patterns: tuple[str, ...],
+) -> DataFrame | None:
+    """Occurrence (pattern, pos) rows on the driver-dict path, or None
+    when no pattern occurs. The backward-search dict becomes a LITERAL
+    [lo, hi) filter union, which keeps the rank-sorted parquet scan
+    row-group-prunable (a join-side-only range predicate cannot reach
+    the reader), and a broadcast local relation of the same ranges
+    labels each hit with its pattern."""
+    state = _fm_backward_search(idx_df, ctab, cum, n1, patterns)
+    live = [(p, lo, hi) for p, (lo, hi) in state.items() if hi > lo]
+    if not live:
+        return None
+    flt = None
+    for _, lo, hi in live:
+        cnd = (F.col("rank") >= lo) & (F.col("rank") < hi)
+        flt = cnd if flt is None else (flt | cnd)
+    rdf = local_frame(spark, live, "pattern string, _lo long, _hi long")
+    return (
+        idx_df.filter(flt)
+        .join(
+            F.broadcast(rdf),
+            (F.col("rank") >= F.col("_lo")) & (F.col("rank") < F.col("_hi")),
+        )
+        .select("pattern", "pos")
     )
 
 
@@ -1114,10 +1149,11 @@ _FM_FORCE_DISTRIBUTED = False
 # BUILD-side driver gate (r14, much smaller than _FM_DRIVER_CUM_MAX):
 # below |alphabet| x (nblocks+1) = this many grid entries the cum
 # parquet is rolled up and written from the driver (one collect + one
-# createDataFrame), replacing the dense-grid join + distributed
+# local relation), replacing the dense-grid join + distributed
 # prefix sum + rollup read-back. Past it the distributed prefix-sum
 # path runs unchanged — the ceiling keeps the collect and the
-# createDataFrame both trivially driver-sized.
+# local relation (held in the driver's plan) both trivially
+# driver-sized.
 _FM_BUILD_DRIVER_MAX = 1 << 16
 
 
@@ -1224,7 +1260,8 @@ def _fm_materialize(
             # coalesced task writes the already-sorted grid — no
             # repartitionByRange sampling job on this path.
             (
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [(ch, blk, v) for (ch, blk), v in sorted(cum.items())],
                     "ch string, blk long, cum long",
                 )
@@ -1238,7 +1275,7 @@ def _fm_materialize(
         # sequence explode: distributed range x broadcast alphabet
         # (the alphabet frame comes straight from the bounded totals —
         # no extra distinct job).
-        alpha_df = spark.createDataFrame([(ch,) for ch in ctab], "ch string")
+        alpha_df = local_frame(spark, [(ch,) for ch in ctab], "ch string")
         dense = (
             spark.range(nblocks + 1)
             .select(F.col("id").alias("blk"))
@@ -1376,37 +1413,24 @@ def q_fm_locate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern (no border restriction: positions never overlap ambiguously
     the way replace-counts do).
 
-    Driver-dict path: the collected ranges (pattern-count-bounded)
-    become a LITERAL [lo, hi) filter union so the rank-sorted parquet
-    row-group-prunes. Distributed-checkpoint path (cum gated off the
-    driver): the block-keyed equi-join of _fm_hits_blocks — no
-    literal pruning, but no driver materialization either."""
+    Driver-dict path: the backward-search dict (pattern-count-bounded)
+    becomes a LITERAL [lo, hi) filter union so the rank-sorted parquet
+    row-group-prunes (_fm_literal_hits). Distributed-checkpoint path
+    (cum gated off the driver): the block-keyed equi-join of
+    _fm_hits_blocks — no literal pruning, but no driver
+    materialization either."""
     idx_path, idx_df, n1, ctab, cum = _fm_load_index(spark, sf_dir)
-    ranges = _fm_ranges_frame(spark, idx_df, idx_path, n1, ctab, cum, _FM_PATTERNS)
     if cum is None:
+        ranges = _fm_ranges_frame(
+            spark, idx_df, idx_path, n1, ctab, cum, _FM_PATTERNS
+        )
         return _fm_hits_blocks(idx_df, ranges).select(
             F.col("pat").alias("pattern"), F.col("pos").cast("long").alias("pos")
         )
-    live = [
-        (r["pat"], r["lo"], r["hi"]) for r in ranges.collect() if r["hi"] > r["lo"]
-    ]
-    if not live:
-        return spark.createDataFrame([], "pattern string, pos long")
-    # Literal [lo, hi) union keeps the scan prunable (a join-side-only
-    # range predicate cannot reach the parquet reader).
-    flt = None
-    for _, lo, hi in live:
-        cnd = (F.col("rank") >= lo) & (F.col("rank") < hi)
-        flt = cnd if flt is None else (flt | cnd)
-    rdf = spark.createDataFrame(live, "pattern string, _lo long, _hi long")
-    return (
-        idx_df.filter(flt)
-        .join(
-            F.broadcast(rdf),
-            (F.col("rank") >= F.col("_lo")) & (F.col("rank") < F.col("_hi")),
-        )
-        .select("pattern", F.col("pos").cast("long").alias("pos"))
-    )
+    hits = _fm_literal_hits(spark, idx_df, n1, ctab, cum, _FM_PATTERNS)
+    if hits is None:
+        return local_frame(spark, [], "pattern string, pos long")
+    return hits.select("pattern", F.col("pos").cast("long").alias("pos"))
 
 
 def _sql_fm_build() -> str:
@@ -1456,7 +1480,8 @@ def q_fm_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples, and the SA order the backward search walks."""
     idx_path, n1, ctab, cum = fm_build_index(spark, sf_dir, force=True)
     idx_df = spark.read.parquet(idx_path)
-    crows = spark.createDataFrame(
+    crows = local_frame(
+        spark,
         [("N", 0, n1)] + _fm_ctab_rows(ctab, n1),
         "item string, lo long, hi long",
     )
@@ -1613,7 +1638,8 @@ def q_fm_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples, and the separator discipline end-to-end."""
     idx_path, _, n1, ctab, cum = fm_build_corpus_index(spark, sf_dir, force=True)
     idx_df = spark.read.parquet(idx_path)
-    crows = spark.createDataFrame(
+    crows = local_frame(
+        spark,
         [("N", 0, n1)] + _fm_ctab_rows(ctab, n1),
         "item string, lo long, hi long",
     )
@@ -1672,34 +1698,17 @@ def q_fm_corpus_locate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from thrill_spark.plans.queries_algo import _label_doc
 
     idx_path, idx_df, offs, n1, ctab, cum = _fm_load_corpus_index(spark, sf_dir)
-    ranges = _fm_ranges_frame(spark, idx_df, idx_path, n1, ctab, cum, _FM_PATTERNS)
     if cum is None:
+        ranges = _fm_ranges_frame(
+            spark, idx_df, idx_path, n1, ctab, cum, _FM_PATTERNS
+        )
         hits = _fm_hits_blocks(idx_df, ranges).select(
             F.col("pat").alias("pattern"), "pos"
         )
-        return _label_doc(hits, offs).select(
-            "pattern",
-            F.col("doc_id").cast("long").alias("doc_id"),
-            (F.col("pos") - F.col("_off")).cast("long").alias("pos"),
-        )
-    live = [
-        (r["pat"], r["lo"], r["hi"]) for r in ranges.collect() if r["hi"] > r["lo"]
-    ]
-    if not live:
-        return spark.createDataFrame([], "pattern string, doc_id long, pos long")
-    flt = None
-    for _, lo, hi in live:
-        cnd = (F.col("rank") >= lo) & (F.col("rank") < hi)
-        flt = cnd if flt is None else (flt | cnd)
-    rdf = spark.createDataFrame(live, "pattern string, _lo long, _hi long")
-    hits = (
-        idx_df.filter(flt)
-        .join(
-            F.broadcast(rdf),
-            (F.col("rank") >= F.col("_lo")) & (F.col("rank") < F.col("_hi")),
-        )
-        .select("pattern", "pos")
-    )
+    else:
+        hits = _fm_literal_hits(spark, idx_df, n1, ctab, cum, _FM_PATTERNS)
+        if hits is None:
+            return local_frame(spark, [], "pattern string, doc_id long, pos long")
     return _label_doc(hits, offs).select(
         "pattern",
         F.col("doc_id").cast("long").alias("doc_id"),

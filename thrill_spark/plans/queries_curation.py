@@ -23,6 +23,7 @@ from thrill_spark.functions import profile as P
 from thrill_spark.functions import text as TX
 from thrill_spark.plans.queries import query
 from thrill_spark.plans.queries_llm import SQL_TOKS
+from thrill_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Corpus-trained bigram LM surprisal (exact-integer -log p stand-in)
@@ -1584,7 +1585,7 @@ def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _persist(
         D2.lsh_verified_pairs(docs, num_hashes=_MH_K, bands=_MH_BANDS, threshold=0.0)
     )
-    taus = spark.createDataFrame([(t,) for t in _SWEEP_TAUS], ["tau_pct"])
+    taus = local_frame(spark, [(t,) for t in _SWEEP_TAUS], "tau_pct long")
     hit = F.col("jaccard") * 100 >= F.col("tau_pct")
     per_tau = (
         pairs.crossJoin(F.broadcast(taus))
@@ -2171,12 +2172,16 @@ def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(fact_path)
     fact = spark.read.parquet(fact_path)
     # the dim side must carry a SELECTIVE predicate for Spark's DPP
-    # rule to inject the runtime pruning subquery (a pre-filtered
-    # literal relation does not qualify)
-    dim = spark.createDataFrame(
-        [("1-URGENT", 1), ("2-HIGH", 2), ("3-MEDIUM", 3),
-         ("4-NOT SPECIFIED", 4), ("5-LOW", 5)],
-        ["p", "code"],
+    # rule to inject the runtime pruning subquery. A pre-filtered
+    # literal relation does not qualify, and the optimizer folds a
+    # filter over a local relation into one, so the dim rows come from
+    # a range: code = id, p = the code's priority name.
+    prios = F.array(*[F.lit(p) for p in (
+        "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"
+    )])
+    dim = spark.range(1, 6).select(
+        F.element_at(prios, F.col("id").cast("int")).alias("p"),
+        F.col("id").alias("code"),
     ).filter("code <= 2")
     joined = fact.join(F.broadcast(dim), fact["o_orderpriority"] == dim["p"])
     return joined.groupBy(F.col("o_orderpriority").alias("priority")).agg(

@@ -19,6 +19,7 @@ from thrill_spark.functions import multimodal as MM
 from thrill_spark.functions import similarity as S
 from thrill_spark.operators.join import asof_join, range_join
 from thrill_spark.plans.queries import query
+from thrill_spark.session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -88,7 +89,7 @@ _BANDS_SQL = " UNION ALL ".join(
 )
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(PRICE_BANDS, "band string, lo double, hi double")
+    bands = local_frame(spark, PRICE_BANDS, "band string, lo double, hi double")
     joined = range_join(orders, F.broadcast(bands), "o_totalprice", "lo", "hi")
     return joined.groupBy("band").agg(
         F.count("*").alias("n_orders"),
@@ -557,7 +558,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Materialize before restoring the broadcast threshold: the agg
         # must execute under the no-broadcast plan it was built with.
         rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

@@ -27,6 +27,7 @@ from thrill_spark.plans.queries_llm import (
     _MH_BANDS,
     _MH_K,
 )
+from thrill_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Overlapping token-window chunking (RAG / pretraining context windows)
@@ -1431,7 +1432,8 @@ def q_manifest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch_dir(spark, "manifest")
     write_with_manifest(docs, path, key_col="doc_id")
     m = verify_manifest(spark, path)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(m["n_rows"], m["checksum"], m["verified"])],
         "n_rows long, checksum long, verified boolean",
     )

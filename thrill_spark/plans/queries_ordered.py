@@ -12,6 +12,7 @@ from thrill_spark.catalog import load_table
 from thrill_spark.operators import basic as B
 from thrill_spark.operators import join as J
 from thrill_spark.plans.queries import _dbl, _dec, query
+from thrill_spark.session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -264,7 +265,8 @@ def q_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_equal_to_dia(spark: SparkSession, sf_dir: str) -> DataFrame:
-    labels = spark.createDataFrame(
+    labels = local_frame(
+        spark,
         [
             ("1-URGENT", "hot"),
             ("2-HIGH", "hot"),
@@ -272,7 +274,7 @@ def q_equal_to_dia(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("4-NOT SPECIFIED", "cold"),
             ("5-LOW", "cold"),
         ],
-        ["o_orderpriority", "label"],
+        "o_orderpriority string, label string",
     )
     orders = load_table(spark, sf_dir, "orders")
     return (

@@ -9,8 +9,10 @@ parallelism, not hard-coded to the test data size).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -128,3 +130,42 @@ def get_spark(app_name: str = "thrill_spark", parallelism: int | None = None) ->
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A driver-built table as a JVM local relation: Thrill's
+    EqualToDIA/Distribute (thrill/api/equal_to_dia.hpp), which turn a
+    driver vector into a DIA without running user code on the workers.
+
+    The rows are checked against the declared schema (a StructType or
+    a DDL string) with the same type verifier the list path of
+    createDataFrame uses, converted column by column to a pyarrow
+    Table and handed to createDataFrame. The plan is a LocalRelation:
+    no Python worker task, no Spark job to collect or broadcast it, and
+    a sizeInBytes of the actual rows. createDataFrame(list) instead
+    parallelizes the list through a PythonRDD (a Python worker task
+    per slice) into a LogicalRDD whose size estimate is Long.MaxValue,
+    which costs every downstream join its broadcast eligibility. A
+    value that fails the verifier or that Arrow cannot convert (a lone
+    UTF-16 surrogate) raises.
+
+    For engine-internal tables only: the user-facing ingestion in
+    api.py and sources/io.py:from_vector takes collections with
+    inferred or nested schemas and keeps createDataFrame."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    verify = _make_type_verifier(struct)
+    rows = list(rows)
+    for row in rows:
+        verify(row)
+    arrow = to_arrow_schema(struct)
+    cols = [
+        pa.array([row[i] for row in rows], type=field.type)
+        for i, field in enumerate(arrow)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), struct)

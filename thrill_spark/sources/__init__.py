@@ -9,7 +9,10 @@ operator-level parity:
 - ReadLines/WriteLines      <-> spark.read.text / df.write.text
 - ReadBinary/WriteBinary    <-> parquet (the native binary format here)
 - Generate                  <-> spark.range + expressions
-- EqualToDIA/ConcatToDIA/Distribute <-> spark.createDataFrame
+- EqualToDIA/ConcatToDIA/Distribute <-> session.local_frame (driver-built
+  engine tables as a JVM LocalRelation through Arrow: no Python worker,
+  actual-size stats); from_vector keeps spark.createDataFrame for user
+  collections with inferred or nested schemas
 """
 
 from thrill_spark.sources.io import (
