@@ -18,583 +18,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from thrill_spark.plans.queries import ORACLES, QUERIES  # noqa: E402
 
-# The driver's correctness gate checks the FIRST 50 registry entries.
-# Round-7 rotation (VERDICT r6 "Next round" #1): the 50 first-time
-# names from the r6 plan — graph/ml, the suffix-family tail,
-# specialized joins (as-of/range/interval/salted/upsert/SCD2), io
-# extras, layout/profile, and real-decode multimodal. Every name is
-# already green in the identical local differential at sf0.001 +
-# sf0.01 (tests/test_oracle_queries.py + tools/validate_sf.py), and
-# ten were judge-verified at sf0.1 during the r6 verdict.
-_R7_WINDOW = [
-    "graph_scc",
-    "graph_label_propagation",
-    "graph_link_prediction",
-    "graph_degree_distribution",
-    "k_core_orders",
-    "sssp_weighted_dag",
-    "ml_pca_power_iteration",
-    "ml_quantile_binning",
-    "ml_feature_hashing",
-    "ml_negative_sampling",
-    "ml_embedding_quantize",
-    "ml_random_projection",
-    "ml_groupwise_ols",
-    "ml_eval_confusion",
-    "ml_feature_label_covariance",
-    "suffix_bwt_doc0",
-    "suffix_rlbwt_doc0",
-    "suffix_lcp_doc0",
-    "suffix_wavelet_doc0",
-    "suffix_array_quadrupling_doc0",
-    "asof_join_purchase_click",
-    "asof_join_next_click",
-    "range_join_price_bands",
-    "interval_join_promotions",
-    "salted_join_lineitem_supplier",
-    "salted_agg_events",
-    "merge_upsert_orders",
-    "scd2_orders_status",
-    "io_xml_roundtrip",
-    "io_datasource_write_roundtrip",
-    "io_python_datasource_lines",
-    "io_datasource_wordcount",
-    "io_compact_small_files",
-    "io_manifest_roundtrip",
-    "io_schema_evolution",
-    "io_snapshot_diff",
-    "io_csv_corrupt_records",
-    "io_dynamic_partition_pruning",
-    "io_xz_lines_roundtrip",
-    "suffix_array_dc7",
-    "layout_zorder_stats",
-    "layout_hilbert_stats",
-    "profile_orders",
-    "profile_key_skew",
-    "profile_join_cardinality",
-    "profile_data_quality",
-    "profile_source_drift",
-    "multimodal_real_png_decode",
-    "multimodal_real_resize",
-    "multimodal_real_wav_decode",
-]
-
-# Round-8 rotation (VERDICT r6 "Next round" #2, committed as CODE so a
-# short round can't drop it): the remaining 37 never-driver-verified
-# names — corpus/text/dedup tail, analytics (basket/skyline/RFM/
-# cohort/ABC/YoY/backlog), similarity extras, and the two multimodal
-# names deferred from the 52-name r6 plan. After this window every
-# registered query has a driver oracle row. At round-8 start set
-# _DRIVER_WINDOW_PRIORITY = _R8_WINDOW + <any r7-built additions>.
-_R8_WINDOW = [
-    "dedup_cluster_assign",
-    "dedup_embedding_cosine",
-    "fn_variant_ops",
-    "corpus_split_assign",
-    "corpus_stratified_sample",
-    "text_repetition_scores",
-    "corpus_shuffle_index",
-    "corpus_sft_pairs",
-    "text_loop_artifacts",
-    "dedup_semantic_keep",
-    "corpus_weighted_sample",
-    "text_url_canonicalize",
-    "corpus_leakage_check",
-    "corpus_chunk_dedup_pack",
-    "cluster_topic_cards",
-    "text_bigram_lm",
-    "corpus_token_budget",
-    "similarity_rp_ann",
-    "dedup_quality_survivors",
-    "text_lexical_diversity",
-    "text_compression_ratio",
-    "corpus_length_buckets",
-    "dedup_threshold_sweep",
-    "multimodal_phash_dedup",
-    "basket_frequent_pairs",
-    "skyline_price_quantity",
-    "similarity_overlap_at_k",
-    "corpus_dedup_by_source",
-    "customer_rfm_segments",
-    "part_abc_analysis",
-    "corpus_curation_full",
-    "text_keyword_extraction",
-    "customer_cohort_ltv",
-    "orders_backlog_daily",
-    "multimodal_wav_frame_energy",
-    "nation_revenue_yoy",
-    "corpus_vocab_growth",
-    # r7-built additions (never windowed; 50 names total — the r8
-    # window is now fully explicit, no registry-order top-up needed)
-    "io_mixed_codec_roundtrip",
-    "window_sliding_partial_tail",
-    "suffix_lcp_partnames",
-    "suffix_wavelet_partnames",
-    "events_theta_setops",
-    "events_seq_pattern_support",
-    "profile_benford_totalprice",
-    "ml_token_vote_classifier",
-    "events_histogram_quantiles",
-    "suffix_fm_count_doc0",
-    "basket_apriori_triples",
-    "text_inverted_index_search",
-    "events_cusum_change_detection",
-]
-
-# Round-10 rotation (VERDICT r8 "Next round" #2, committed as CODE so
-# a short or zero-turn round can't drop it): the 4 r7-overflow names
-# that never fit a window, the 4 r9-built queries, plus the 42 OLDEST
-# driver-green names (r1/r2 windows, in registry order) re-verified at
-# HEAD. After this window every registered query has a driver oracle
-# row (303/303 — dedup_exact_substr_clean joined the registry and this
-# window in r10). At round-10 start the ONLY required edit is
-# _DRIVER_WINDOW_PRIORITY = _R10_WINDOW.
-_R10_WINDOW = [
-    "orders_rollup_revenue",
-    "lineitem_cube_flags",
-    "layout_zonemap_pruning",
-    "suffix_lcs_doc01",
-    # r9-built additions (never driver-windowed)
-    "suffix_longest_repeat_doc0",
-    "suffix_fm_locate_doc0",
-    "dedup_exact_substr_sa",
-    "dedup_exact_substr_coverage",
-    # r10-built (first-time verification outranks re-verification)
-    "dedup_exact_substr_clean",
-    "dedup_exact_substr_full",
-    # oldest r1/r2-green names, registry order — HEAD re-verification
-    "reduce_by_key_pricing",
-    "inner_join_lineitem_orders",
-    "map_filter_project",
-    "flatmap_wordcount",
-    "reduce_pair_custkey",
-    "group_by_key_median",
-    "left_join_customer_orders",
-    "anti_join_customers_without_orders",
-    "semi_join_parts_ordered",
-    "union_bag_counts",
-    "set_intersect_except",
-    "sort_top_orders",
-    "zip_with_index_orders",
-    "zip_cut_customers_parts",
-    "prefix_sum_totalprice",
-    "window_sliding_sum",
-    "window_disjoint_blocks",
-    "reduce_to_index_nation",
-    "merge_sorted_halves",
-    "sample_systematic",
-    "bernoulli_sample",
-    "hyperloglog_distinct",
-    "actions_scalar",
-    "generate_range",
-    "zip_pad_customers_suppliers",
-    "zip_window_orders_customers",
-    "flat_window_price_delta",
-    "ex_prefix_sum_quantity",
-    "group_to_index_names",
-    "concat_customers_suppliers",
-    "rollup_pricing",
-    "cube_orders",
-    "pivot_flag_by_status",
-    "top_k_per_group",
-    "distinct_counts",
-    "equal_to_dia_priority_labels",
-    "text_token_stats",
-    "text_quality",
-    "text_lang_id",
-    "dedup_exact",
-]
-assert len(_R10_WINDOW) == 50, len(_R10_WINDOW)
-
-# Round-11 rotation, committed as CODE so a short round can't drop it
-# (the r6/r8 lesson): after r10 every registered query has a driver
-# row, so re-verification cadence takes over — these are the 50
-# STALEST driver-verified names (by last-verified round, then name),
-# i.e. the r2/r3-era tail nothing has re-checked at a recent HEAD. At
-# round-11 start the ONLY required edit is
-# _DRIVER_WINDOW_PRIORITY = _R11_WINDOW; swap any r11-built queries in
-# for the bottom of this list (first-time verification outranks
-# re-verification).
-_R11_WINDOW = [
-    # last driver-verified r2
-    "dedup_jaccard_pairs",
-    "dedup_lsh_candidate_pairs",
-    "dedup_simhash",
-    "similarity_ann_lsh",
-    "similarity_cosine_topk",
-    # last driver-verified r3
-    "bucketed_join_colocated",
-    "corpus_build_e2e",
-    "corpus_decontaminate",
-    "corpus_quota_interleave",
-    "dedup_bloom_prefilter",
-    "dedup_incremental",
-    "dedup_paragraph_boilerplate",
-    "events_multires_rollup",
-    "events_stream_dedup",
-    "events_stream_join",
-    "events_stream_stateful_counts",
-    "events_stream_tumbling",
-    "fn_approx_quantiles",
-    "fn_conditional_null_ops",
-    "fn_math_ops",
-    "fn_regex_ops",
-    "fn_struct_map_ops",
-    "fn_url_json_ops",
-    "group_fold_order_gaps",
-    "io_binary_roundtrip",
-    "io_csv_roundtrip",
-    "io_gz_lines_roundtrip",
-    "io_json_roundtrip",
-    "io_lines_one_glob_roundtrip",
-    "io_lines_roundtrip",
-    "io_orc_roundtrip",
-    "io_partitioned_pruned_scan",
-    "kmeans_clusters",
-    "multimodal_audio_chunks",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_resize_meta",
-    "pagerank",
-    "prefix_scan_running_min",
-    "rebalance_partitions",
-    "sample_exact_k",
-    "sample_exact_k_hypergeometric",
-    "similarity_ann_ivf",
-    "similarity_knn_join",
-    "sort_stable_priority",
-    "suffix_array_doc0",
-    "text_bpe_tokenize",
-    "text_chunk_overlap",
-    "text_heavy_hitters",
-    "dedup_minhash_signatures",
-]
-assert len(_R11_WINDOW) == 50, len(_R11_WINDOW)
-
-# Queries whose CODE PATH changed in round 11 (suffix family: step=8
-# octupling + explode assembly + prefix-class islands; iterative
-# algorithms: honest-stats checkpoints; apriori: relative support;
-# thrill_lines: file_idx schema). First-time verification of changed
-# paths outranks re-verification of stale-but-untouched ones, so these
-# lead the window; the stalest tail fills the rest.
-_R11_CHANGED = [
-    "dedup_exact_substr_sa",
-    "dedup_exact_substr_full",
-    "dedup_exact_substr_clean",
-    "dedup_exact_substr_coverage",
-    "basket_apriori_triples",
-    "suffix_array_doc0",
-    "suffix_array_quadrupling_doc0",
-    "suffix_array_dc3",
-    "suffix_array_dc7",
-    "suffix_bwt_doc0",
-    "suffix_rlbwt_doc0",
-    "suffix_fm_count_doc0",
-    "suffix_fm_locate_doc0",
-    "suffix_lcp_doc0",
-    "suffix_lcp_partnames",
-    "suffix_lcs_doc01",
-    "suffix_longest_repeat_doc0",
-    "suffix_wavelet_doc0",
-    "suffix_wavelet_partnames",
-    "pagerank",
-    "bfs_distances",
-    "k_core_orders",
-    "sssp_weighted_dag",
-    "graph_scc",
-    "graph_label_propagation",
-    "dedup_pipeline_survivors",
-    "corpus_build_e2e",
-    "dedup_cluster_assign",
-    "dedup_cluster_histogram",
-    "dedup_quality_survivors",
-    "er_customer_linkage",
-    "doc_fingerprint_winnow",
-    "text_heavy_hitters",
-    "io_datasource_write_roundtrip",
-    "kmeans_clusters",
-]
-
-_DRIVER_WINDOW_PRIORITY = (
-    _R11_CHANGED + [n for n in _R11_WINDOW if n not in _R11_CHANGED]
-)[:50]
-assert len(_DRIVER_WINDOW_PRIORITY) == 50, len(_DRIVER_WINDOW_PRIORITY)
-
-# Round-12 rotation, committed as CODE so a short round can't drop it:
-# the 50 STALEST driver-verified names at r12 start — computed from
-# CORRECTNESS_r01..r11 as max round with a green (err=None, rows_match)
-# row per name, ascending (round, name). This is the r3/r4-era tail the
-# r10/r11 rotations didn't reach: the fn_* function-surface family, the
-# io_* roundtrips, multimodal plumbing, events windows, and samplers.
-# At round-12 start the ONLY required edit is
-# _DRIVER_WINDOW_PRIORITY = _R12_CHANGED-leading merge below; swap any
-# r12-built/changed queries in at the top (first-time verification of
-# changed paths outranks re-verification of stale-but-untouched ones).
-_R12_WINDOW = [
-    # last driver-verified r2
-    "dedup_minhash_signatures",
-    # last driver-verified r3
-    "events_stream_tumbling",
-    "fn_approx_quantiles",
-    "fn_conditional_null_ops",
-    "fn_math_ops",
-    "fn_regex_ops",
-    "fn_struct_map_ops",
-    "fn_url_json_ops",
-    "group_fold_order_gaps",
-    "io_binary_roundtrip",
-    "io_csv_roundtrip",
-    "io_gz_lines_roundtrip",
-    "io_json_roundtrip",
-    "io_lines_one_glob_roundtrip",
-    "io_lines_roundtrip",
-    "io_orc_roundtrip",
-    "io_partitioned_pruned_scan",
-    "multimodal_audio_chunks",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_resize_meta",
-    "prefix_scan_running_min",
-    "rebalance_partitions",
-    "sample_exact_k",
-    "sample_exact_k_hypergeometric",
-    "similarity_ann_ivf",
-    "similarity_knn_join",
-    "sort_stable_priority",
-    "text_bpe_tokenize",
-    "text_chunk_overlap",
-    "text_minhash_containment",
-    "text_pii_redact",
-    "text_tfidf_pairs",
-    "text_unigram_rarity",
-    # last driver-verified r4
-    "dedup_cdc_chunks",
-    "events_json_props",
-    "events_sessionize",
-    "events_sliding_1h_30m",
-    "events_tumbling_hourly",
-    "fn_array_ops",
-    "fn_array_sort_comparator",
-    "fn_bitwise_hash_ops",
-    "fn_collect_aggs",
-    "fn_datetime_ops",
-    "fn_higher_order_array",
-    "fn_json_shred_nested",
-    "fn_map_higher_order",
-    "fn_percentiles_exact",
-    "fn_ranking_windows",
-    "fn_stats_exact",
-]
-assert len(_R12_WINDOW) == 50, len(_R12_WINDOW)
-
-# Queries whose CODE PATH changes in round 12 lead the window (same
-# discipline as _R11_CHANGED). Populated as r12 work lands: ReadLines
-# facade (codec/remote fallback + Concat _ord densification + batched
-# DataSource) re-verifies the io lines family; k-core/PageRank honest
-# return-frame changes re-verify those algorithm rows.
-_R12_CHANGED = [
-    "io_lines_roundtrip",
-    "io_lines_one_glob_roundtrip",
-    "io_gz_lines_roundtrip",
-    "k_core_orders",
-    "pagerank",
-]
-
-_DRIVER_WINDOW_PRIORITY_R12 = (
-    _R12_CHANGED + [n for n in _R12_WINDOW if n not in _R12_CHANGED]
-)[:50]
-assert len(_DRIVER_WINDOW_PRIORITY_R12) == 50, len(_DRIVER_WINDOW_PRIORITY_R12)
-
-# Round-13 rotation, PRE-STAGED as code (the r8/r10 discipline — a
-# short or zero-turn round must not drop the cadence): the 50 stalest
-# names assuming the r12 window verifies — the r4 remainder (the full
-# 22-query TPC-H suite, string/window fn_* tail, samplers) and the
-# oldest r6 names. At round-13 start the ONLY required edit is
-# _DRIVER_WINDOW_PRIORITY = <r13-changed names> + _R13_WINDOW fill,
-# recomputed against CORRECTNESS_r12 if the r12 gate differed.
-_R13_WINDOW = [
-    # last driver-verified r4
-    "fn_ranking_windows",
-    "fn_stats_exact",
-    "fn_string_distance",
-    "fn_string_ops",
-    "fn_weighted_median",
-    "fn_window_frames",
-    "io_bz2_lines_roundtrip",
-    "io_lines_sized_roundtrip",
-    "kth_statistic",
-    "logreg_sgd_planted",
-    "tpch_q1_pricing_summary",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_order_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_stock",
-    "tpch_q12_late_shipments",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q16_part_supplier_counts",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_volume_customers",
-    "tpch_q19_discounted_revenue",
-    "tpch_q20_excess_stock_suppliers",
-    "tpch_q21_waiting_orders",
-    "tpch_q22_global_sales_opportunity",
-    "triangle_count",
-    # last driver-verified r6
-    "corpus_dataset_card",
-    "corpus_decontaminate_substring",
-    "corpus_dsir_select",
-    "corpus_epoch_shuffles",
-    "corpus_pack_greedy",
-    "corpus_quota_apportionment",
-    "corpus_span_corruption",
-    "corpus_temperature_mix",
-    "dedup_fuzzy_levenshtein",
-    "dedup_ngram_cover",
-    "dedup_simhash_hamming",
-    "events_ab_experiment",
-    "events_anomaly_mad",
-    "events_attribution_first_touch",
-    "events_attribution_last_touch",
-    "events_attribution_linear",
-    "events_burst_detection",
-]
-assert len(_R13_WINDOW) == 50, len(_R13_WINDOW)
-
-# Queries whose CODE PATH changes in round 13 lead the window (same
-# discipline as _R12_CHANGED). The build-once FM index (fm_build
-# materialized SA/BWT/C-table/rank-samples consumed by count+locate)
-# re-verifies the fm rows; the oversized-bz2 auto-route re-verifies
-# io_bz2_lines_roundtrip (already in the window); a zstd roundtrip
-# lands here if the sandbox Hadoop decodes it.
-_R13_CHANGED: list[str] = [
-    "suffix_fm_build",
-    "suffix_fm_count_doc0",
-    "suffix_fm_locate_doc0",
-    "suffix_fm_corpus_build",
-    "suffix_fm_corpus_count",
-    "suffix_fm_corpus_locate",
-    "suffix_fm_decontaminate",
-    "io_lz4_lines_roundtrip",
-    "io_snappy_lines_roundtrip",
-    "io_deflate_lines_roundtrip",
-]
-
-_DRIVER_WINDOW_PRIORITY_R13 = (
-    _R13_CHANGED + [n for n in _R13_WINDOW if n not in _R13_CHANGED]
-)[:50]
-assert len(_DRIVER_WINDOW_PRIORITY_R13) == 50, len(_DRIVER_WINDOW_PRIORITY_R13)
-
-# Round-14 rotation, PRE-STAGED as code (the r8/r10/r12 discipline — a
-# short or zero-turn round must not drop the cadence): the 50 stalest
-# names assuming the r13 window verifies — computed from
-# CORRECTNESS_r01..r12 as max green round per name with the staged r13
-# window counted as 13. That is the r6 tail (the events sketch/stream/
-# funnel family plus the nine names the r13 changed-queries push
-# displaced) and the oldest r8 names. At round-14 start the ONLY
-# required edit is _DRIVER_WINDOW_PRIORITY = <r14-changed names> +
-# _R14_WINDOW fill, recomputed against CORRECTNESS_r13 if the r13
-# gate differed.
-_R14_WINDOW = [
-    # last driver-verified r6
-    "corpus_temperature_mix",
-    "dedup_fuzzy_levenshtein",
-    "dedup_ngram_cover",
-    "dedup_simhash_hamming",
-    "events_ab_experiment",
-    "events_anomaly_mad",
-    "events_attribution_first_touch",
-    "events_attribution_last_touch",
-    "events_attribution_linear",
-    "events_burst_detection",
-    "events_cms_frequency",
-    "events_conversion_latency",
-    "events_decay_counters",
-    "events_funnel_in_session",
-    "events_funnel_view_click_purchase",
-    "events_gap_fill",
-    "events_gaps_and_islands",
-    "events_histogram_quantile",
-    "events_hll_mergeable",
-    "events_incremental_rollup",
-    "events_kmv_sketch",
-    "events_markov_transitions",
-    "events_rolling_hour_counts",
-    "events_seasonality_profile",
-    "events_session_window_builtin",
-    "events_sessionize_capped",
-    "events_sliding_distinct_users",
-    "events_stream_enrich",
-    "events_stream_outer_join",
-    "events_stream_restart_exactly_once",
-    "events_stream_sessionize",
-    "events_stream_upsert",
-    "events_time_weighted_avg",
-    "events_top_types_per_hour",
-    "events_user_retention",
-    "events_watermark_lateness",
-    "fn_generators",
-    "multimodal_silence_segments",
-    "similarity_pq_ann",
-    "text_gopher_gate",
-    # last driver-verified r8
-    "asof_join_next_click",
-    "asof_join_purchase_click",
-    "graph_degree_distribution",
-    "graph_link_prediction",
-    "interval_join_promotions",
-    "io_compact_small_files",
-    "io_csv_corrupt_records",
-    "io_datasource_wordcount",
-    "io_dynamic_partition_pruning",
-    "io_manifest_roundtrip",
-]
-assert len(_R14_WINDOW) == 50, len(_R14_WINDOW)
-
-# Queries whose CODE PATH changes in round 14 lead the window (same
-# discipline as _R12_CHANGED/_R13_CHANGED). The FM family changes via
-# (a) the distributed rank-checkpoint gate + always-written cum
-# parquet in _fm_materialize (VERDICT r13 #3), (b) the set-scale
-# DataFrame backward search that generalizes suffix_fm_decontaminate
-# to 64 probes (VERDICT r13 #4), and (c) the ADVICE cache-key fix
-# (abspath hash in the scratch tag). io_bz2_autosplit_roundtrip is
-# new (VERDICT r13 #5): the oversized-bz2 Hadoop auto-route proven
-# end-to-end as an oracle row, which also re-verifies the ADVICE
-# url-encoded-metadata-path fix in _hadoop_split_lines.
-_R14_CHANGED: list[str] = [
-    "suffix_fm_decontaminate",
-    "suffix_fm_corpus_build",
-    "suffix_fm_corpus_count",
-    "suffix_fm_corpus_locate",
-    "suffix_fm_build",
-    "suffix_fm_count_doc0",
-    "suffix_fm_locate_doc0",
-    "io_bz2_autosplit_roundtrip",
-]
-
-_DRIVER_WINDOW_PRIORITY_R14 = (
-    _R14_CHANGED + [n for n in _R14_WINDOW if n not in _R14_CHANGED]
-)[:50]
-assert len(_DRIVER_WINDOW_PRIORITY_R14) == 50, len(_DRIVER_WINDOW_PRIORITY_R14)
-
-
-# Round-15 rotation, PRE-STAGED as code (the r8/r10/r12/r13 discipline
-# — a short or zero-turn round must not drop the cadence): the 50
-# stalest names assuming the r14 window verifies — computed from
+# The driver's correctness gate checks the FIRST 50 registry entries:
+# the changed queries (_R15_CHANGED) first, then the staleness fill.
+# _R15_WINDOW holds the 50 stalest names, computed from
 # CORRECTNESS_r01..r13 green rows (max green round per name) with the
-# staged r14 window counted as 14. That is the r8 remainder (the 8
-# names the r14 changed-queries push displaced plus the io/layout/ml/
-# multimodal/profile/salted families) and the oldest r9 names. At
-# round-15 start the ONLY required edit is _DRIVER_WINDOW_PRIORITY =
-# <r15-changed names> + _R15_WINDOW fill, recomputed against
-# CORRECTNESS_r14 if the r14 gate differed.
+# r14 window counted as 14. That is the r8 remainder (the 8 names the
+# r14 changed-queries push displaced plus the io/layout/ml/multimodal/
+# profile/salted families) and the oldest r9 names.
 _R15_WINDOW = [
     # last driver-verified r8
     "graph_degree_distribution",

@@ -251,6 +251,95 @@ def test_cc_propagation_raises_on_nonconvergence(spark):
         A.connected_components(path, algorithm="propagation", max_iters=3)
 
 
+def _path(spark, n, schema):
+    """A directed path 0 -> 1 -> ... -> n-1 (weight 1 if the schema has
+    a third column)."""
+    width = len(schema.split(","))
+    return spark.createDataFrame([(i, i + 1, 1)[:width] for i in range(n - 1)], schema)
+
+
+# name -> (run(edges, bound), edge schema, path length, smallest round
+# bound that converges on that path, rows returned for no edges).
+# bfs and sssp still place their source at distance 0.
+FIXPOINTS = {
+    "k_core": (lambda e, m: A.k_core(e, 2, max_iters=m), "u long, v long", 9, 6, []),
+    "sssp": (lambda e, m: A.sssp(e, 0, max_iters=m), "src long, dst long, w long", 6, 6,
+             [(0, 0)]),
+    "bfs": (lambda e, m: A.bfs(e, 0, max_iters=m), "src long, dst long", 6, 6, [(0, 0)]),
+    "cc_star": (lambda e, m: A.connected_components(e, max_iters=m), "a long, b long", 32, 6,
+                []),
+    "cc_propagation": (
+        lambda e, m: A.connected_components(e, max_iters=m, algorithm="propagation"),
+        "a long, b long", 6, 6, [],
+    ),
+    "scc": (lambda e, m: A.strongly_connected_components(e, max_rounds=m),
+            "src long, dst long", 6, None, []),
+}
+
+
+@pytest.mark.parametrize("name", sorted(FIXPOINTS))
+def test_fixpoint_round_bound_and_empty_input(spark, name):
+    """Each fixpoint raises one round below the smallest bound that
+    suffices on a path and converges at it (k-core at k=2 peels a path
+    to nothing; the others return one row per node), and an empty edge
+    table converges at once — its (0, None) signature repeats — to a
+    frame with the algorithm's schema."""
+    run, schema, n, bound, empty_rows = FIXPOINTS[name]
+    path = _path(spark, n, schema)
+    full = run(path, bound or 4)
+    assert full.count() == (0 if name == "k_core" else n)
+    if bound is not None:
+        with pytest.raises(RuntimeError):
+            run(path, bound - 1).collect()
+    out = run(spark.createDataFrame([], schema), bound or 4)
+    assert out.schema == full.schema
+    assert sorted(tuple(r) for r in out.collect()) == empty_rows
+
+
+# name -> (call, number of entry/return _honest_ckpt calls)
+LOOP_CALLS = {
+    "k_core": (lambda s: A.k_core(_path(s, 9, "u long, v long"), 2), 2),
+    "sssp": (lambda s: A.sssp(_path(s, 6, "src long, dst long, w long"), 0), 1),
+    "bfs": (lambda s: A.bfs(_path(s, 6, "src long, dst long"), 0), 1),
+    "min_label": (lambda s: A._min_label_fixpoint(
+        s.range(6).withColumnRenamed("id", "node"), _path(s, 6, "u long, v long")), 1),
+    "cc_propagation": (lambda s: A.connected_components(
+        _path(s, 6, "a long, b long"), algorithm="propagation"), 2),
+}
+
+
+@pytest.mark.parametrize("name", sorted(LOOP_CALLS))
+def test_fixpoint_jobs_run_in_checkpoints(spark, monkeypatch, name):
+    """Every Spark job of a fixpoint call runs inside a round
+    checkpoint (_ckpt_with_sig, which also yields the convergence
+    signature) or one of the entry/return _honest_ckpt calls: no
+    count, aggregate or isEmpty probe of its own. Counted on the
+    scheduler's job ids."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    inside = {"_ckpt_with_sig": [], "_honest_ckpt": []}
+
+    def counted(fname):
+        fn = getattr(A, fname)
+
+        def wrapper(*args, **kw):
+            j0 = dag.nextJobId()
+            out = fn(*args, **kw)
+            inside[fname].append(dag.nextJobId() - j0)
+            return out
+
+        return wrapper
+
+    for fname in inside:
+        monkeypatch.setattr(A, fname, counted(fname))
+    call, honest_calls = LOOP_CALLS[name]
+    j0 = dag.nextJobId()
+    call(spark)
+    total = dag.nextJobId() - j0
+    assert len(inside["_honest_ckpt"]) == honest_calls, inside
+    assert len(inside["_ckpt_with_sig"]) >= 2, inside
+    assert total == sum(inside["_ckpt_with_sig"]) + sum(inside["_honest_ckpt"]), inside
+
+
 def test_suffix_array_dc3_matches_bruteforce(spark):
     """DC3 vs brute force on a random string, with the base threshold
     forced small so multiple DISTRIBUTED recursion levels execute

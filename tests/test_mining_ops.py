@@ -309,9 +309,9 @@ def test_sssp_long_chain_crosses_honest_reset(spark):
     from thrill_spark.plans.algorithms import sssp
 
     # Bellman-Ford relaxes one hop per round, so a 12-edge chain needs
-    # >8 rounds — exercising the r14 lazy-checkpoint loop ACROSS the
-    # every-8th eager _honest_ckpt stats reset (rounds 1-7 lazy, round
-    # 8 honest, then lazy again to the fixpoint).
+    # >8 rounds — running _fixpoint's plain round checkpoints ACROSS its
+    # every-8th honest stats reset (rounds 1-7 plain, round 8 honest,
+    # then plain again to the fixpoint).
     n = 13
     edges = spark.createDataFrame(
         [(i, i + 1, i + 1) for i in range(n - 1)], ["src", "dst", "w"]

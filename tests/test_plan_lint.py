@@ -69,20 +69,20 @@ def test_plan_lint(spark, name):
 _CREATE_DATAFRAME_ALLOWED = {"session.py": {"local_frame"}, "api.py": None, "sources/io.py": None}
 
 
-def _create_dataframe_calls(tree):
-    """(enclosing function name or None, line) of every
-    `<expr>.createDataFrame(...)` call in a module AST."""
+def _method_calls(tree, attr):
+    """(enclosing module-level function name or None, line) of every
+    `<expr>.<attr>(...)` call in a module AST."""
     import ast
 
     out = []
 
     def visit(node, fn):
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        if fn is None and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             fn = node.name
         if (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "createDataFrame"
+            and node.func.attr == attr
         ):
             out.append((fn, node.lineno))
         for child in ast.iter_child_nodes(node):
@@ -102,10 +102,32 @@ def test_driver_tables_are_local_relations():
     bad = []
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
-        for fn, line in _create_dataframe_calls(ast.parse(path.read_text())):
+        for fn, line in _method_calls(ast.parse(path.read_text()), "createDataFrame"):
             if rel in _CREATE_DATAFRAME_ALLOWED:
                 allowed = _CREATE_DATAFRAME_ALLOWED[rel]
                 if allowed is None or fn in allowed:
                     continue
             bad.append(f"{rel}:{line} (in {fn})")
     assert not bad, "createDataFrame outside session.local_frame:\n" + "\n".join(bad)
+
+
+# Functions of plans/algorithms.py allowed to call localCheckpoint: the
+# two checkpoint helpers and the suffix ladder's bucket sort. Every
+# iterative loop checkpoints through _fixpoint, whose round checkpoint
+# also decides convergence.
+_LOCAL_CHECKPOINT_ALLOWED = {"_honest_ckpt", "_ckpt_with_sig", "suffix_array"}
+
+
+def test_loops_checkpoint_through_fixpoint():
+    import ast
+    import pathlib
+
+    import thrill_spark.plans.algorithms as A
+
+    tree = ast.parse(pathlib.Path(A.__file__).read_text())
+    bad = [
+        f"algorithms.py:{line} (in {fn})"
+        for fn, line in _method_calls(tree, "localCheckpoint")
+        if fn not in _LOCAL_CHECKPOINT_ALLOWED
+    ]
+    assert not bad, "localCheckpoint outside the checkpoint helpers:\n" + "\n".join(bad)

@@ -7,11 +7,14 @@ on a 1000-row probe), so any consumer joining the result against a
 big table silently loses broadcast eligibility — the defect class
 that cost the r10 ExactSubstr descent 10.19x at K=8 before 622fafb.
 _honest_ckpt (plans/algorithms.py) pins each checkpoint's origin to a
-materialized InMemoryRelation whose stats are actual bytes; these
-tests assert the invariant holds END-TO-END on every iterative
-algorithm's returned frame, run long enough to hit the per-round
-checkpoint path. A regression re-introducing plain checkpoints fails
-the bound by 10+ orders of magnitude, so the threshold is not tight.
+materialized InMemoryRelation whose stats are actual bytes. The graph
+fixpoints run on _fixpoint: plain round checkpoints with an honest
+reset every 8th round (none for the join-free star CC rounds), and an
+honest entry and return frame. These tests assert the invariant holds
+END-TO-END on every iterative algorithm's returned frame, run long
+enough to hit the per-round checkpoint path. A regression returning a
+plain checkpoint fails the bound by 10+ orders of magnitude, so the
+threshold is not tight.
 """
 
 from pyspark.sql import functions as F

@@ -1,10 +1,14 @@
 """Iterative algorithms mirroring the reference's example workloads
-(SURVEY §2.13): PageRank, k-means, triangle counting, k-th statistic.
+(SURVEY §2.13): PageRank, k-means, triangle counting, k-th statistic,
+and the graph fixpoints (BFS, SSSP, k-core, connected components,
+SCC).
 
 These exercise the loop/Collapse/Cache discipline: Spark DataFrame
 lineage grows per iteration, so each loop localCheckpoints (the
 Collapse analogue, thrill/api/collapse.hpp:29 — fold the pending DAG
-into a concrete node) to keep planning cost bounded.
+into a concrete node) to keep planning cost bounded. Every graph
+fixpoint is a step function run by _fixpoint, whose round checkpoint
+also computes the set signature that decides convergence.
 """
 
 from __future__ import annotations
@@ -46,9 +50,9 @@ def _ckpt_with_sig(df: DataFrame, *sig_cols: str, honest: bool = True):
     """Checkpoint plus a (count, bit_xor(xxhash64(sig_cols))) set
     signature computed BY the checkpoint's own materialization job via
     Dataset.observe (accumulator-backed CollectMetrics) — the signature
-    costs ZERO extra jobs/scheduler barriers, where the previous
-    per-round `agg(...).first()` paid one full job per fixpoint round
-    (the "signature-from-checkpoint-write" mechanism, guide §5.4).
+    costs ZERO extra jobs/scheduler barriers, where a separate
+    `agg(...).first()` or isEmpty probe pays one full job per fixpoint
+    round (the "signature-from-checkpoint-write" mechanism, guide §5.4).
 
     honest=True is _honest_ckpt with the signature: the observe node
     sits ABOVE the persist (so the CollectMetricsExec is in THIS
@@ -58,11 +62,10 @@ def _ckpt_with_sig(df: DataFrame, *sig_cols: str, honest: bool = True):
     checkpointed rows and their honest InMemoryRelation-backed stats
     are unchanged). honest=False is a plain localCheckpoint, which
     copies the origin plan's estimate: one job fewer (no persist
-    pass), for loop rounds whose plan has no join, so the estimate
-    cannot compound (_cc_star rounds).
+    pass), for _fixpoint's rounds between honest resets.
 
     Returns (checkpointed_df, (n, h)); h is None for an empty set
-    (bit_xor over zero rows), matching the old agg semantics."""
+    (bit_xor over zero rows)."""
     from pyspark.sql import Observation
 
     src = df.persist() if honest else df
@@ -78,21 +81,39 @@ def _ckpt_with_sig(df: DataFrame, *sig_cols: str, honest: bool = True):
     return out, (m["n"], m["h"])
 
 
-def _loop_ckpt(df: DataFrame, rnd: int, every: int = 8) -> DataFrame:
-    """Collapse for LONG fixpoint loops whose rounds JOIN: plain
-    localCheckpoint per round (one storage pass), with an _honest_ckpt
-    stats reset every `every`-th round to bound the origin estimate
-    that the round joins compound. The k-core lesson: a persist-backed
-    checkpoint EVERY round costs an extra block-storage pass each time
-    (5.2 s vs 2.4 s on the k-core bench graph over 7 rounds), while
-    in-loop joins are SMJ-correct at any scale — per-round honesty
-    only pays where round joins need broadcasts (suffix bucket sort).
-    Join-free rounds need no reset at all (_cc_star). Algorithm RETURN
-    frames still go through _honest_ckpt so consumers see honest stats
-    (tests/test_stats_honesty.py)."""
-    if (rnd + 1) % every == 0:
-        return _honest_ckpt(df)
-    return df.localCheckpoint()
+def _fixpoint(init, step, sig_cols, max_rounds, failure, reset_every=8):
+    """Run `state = step(state, rnd)` for rnd = 0, 1, ... until a round
+    leaves the state's set unchanged; return that round's state, or
+    raise RuntimeError(failure) after max_rounds rounds. The one loop
+    shape of every graph fixpoint here (Thrill's step + Collapse loop,
+    examples/page_rank/page_rank.hpp:79-83).
+
+    `init` is checkpointed honestly (the caller's plan may carry
+    join-product size estimates, which a plain checkpoint would copy
+    into round 0). Each round is one _ckpt_with_sig, and its
+    (count, bit_xor(xxhash64(sig_cols))) signature is the convergence
+    test: equal to the previous round's ⇒ fixpoint, at no extra job
+    (an empty set reads (0, None) both times, which counts as
+    converged). A collision on unequal sets is ~2^-64: it stops one
+    round early.
+
+    Round checkpoints are plain, with an honest stats reset every
+    `reset_every`-th round to bound the origin estimate that round
+    joins compound. Measured on the k-core bench graph over 7 rounds:
+    a persist-backed checkpoint EVERY round costs an extra
+    block-storage pass each time (5.2 s vs 2.4 s), while in-loop joins
+    are SMJ-correct at any scale. reset_every=None never resets, for
+    join-free rounds whose estimate cannot compound (_cc_star). The
+    other callers _honest_ckpt the frame they return, so consumers see
+    honest stats (tests/test_stats_honesty.py)."""
+    state, prev = _ckpt_with_sig(init, *sig_cols)
+    for rnd in range(max_rounds):
+        honest = reset_every is not None and (rnd + 1) % reset_every == 0
+        state, sig = _ckpt_with_sig(step(state, rnd), *sig_cols, honest=honest)
+        if sig == prev:
+            return state
+        prev = sig
+    raise RuntimeError(failure)
 
 
 def pagerank(
@@ -250,37 +271,31 @@ def kth_statistic(df: DataFrame, col: str, kth: int):
 def bfs(edges: DataFrame, source: int, max_iters: int = 25,
         src: str = "src", dst: str = "dst") -> DataFrame:
     """BFS shortest hop-distances from `source` (reference example
-    listing, SURVEY §2.13). Iterative frontier expansion: each round
-    joins the frontier to the edge table and anti-joins already-visited
-    nodes; the driver only decides termination (isEmpty on the new
-    frontier), never touches row data.
+    listing, SURVEY §2.13). Round rnd expands the frontier — the nodes
+    at distance rnd — by one equi-join to the edge table and one
+    anti-join against the visited nodes; the round that finds no new
+    node leaves the distance set unchanged, which ends the _fixpoint.
+    The driver never touches row data. max_iters bounds the rounds,
+    the last of which only confirms the empty frontier.
 
-    Scale: frontier and dist are hash-partitioned by node; each round
-    is one equi-join + one anti-join. localCheckpoint per round is the
-    Collapse analogue keeping lineage flat."""
-    spark = edges.sparkSession
-    dist = local_frame(spark, [(source, 0)], "node long, d int")
-    frontier = dist
-    for i in range(1, max_iters + 1):
+    Scale: the distance set is hash-partitioned by node; each round is
+    one equi-join + one anti-join."""
+
+    def step(dist: DataFrame, rnd: int) -> DataFrame:
+        frontier = dist.filter(F.col("d") == rnd)
         nxt = (
             frontier.join(edges, frontier["node"] == edges[src])
-            .select(F.col(dst).alias("node"))
-            .distinct()
+            .select(F.col(dst).alias("node")).distinct()
             .join(dist, on="node", how="left_anti")
-            .withColumn("d", F.lit(i))
         )
-        nxt = _loop_ckpt(nxt, i)
-        if nxt.isEmpty():
-            break
-        dist = _loop_ckpt(dist.unionByName(nxt), i)
-        frontier = nxt
-    else:
-        raise RuntimeError(
-            f"bfs: frontier still non-empty after max_iters={max_iters} "
-            "rounds (graph eccentricity exceeds the bound); distances "
-            "would be incomplete. Raise max_iters."
-        )
-    return _honest_ckpt(dist)
+        return dist.unionByName(nxt.withColumn("d", F.lit(rnd + 1)))
+
+    init = local_frame(edges.sparkSession, [(source, 0)], "node long, d int")
+    return _honest_ckpt(_fixpoint(
+        init, step, ("node", "d"), max_iters,
+        f"bfs: frontier still non-empty after max_iters={max_iters} rounds (graph "
+        "eccentricity exceeds the bound); distances would be incomplete. Raise max_iters.",
+    ))
 
 
 def connected_components(
@@ -310,10 +325,9 @@ def connected_components(
     Near-duplicate graphs are unions of near-cliques (diameter 2-3), so
     it is competitive there; kept as the differential check for 'star'.
 
-    Both raise RuntimeError instead of silently returning wrong labels
-    when max_iters is exhausted without convergence. localCheckpoint
-    per round is the Collapse analogue keeping lineage flat across
-    iterations (thrill/api/collapse.hpp:29 use-case)."""
+    Both run on _fixpoint, so both raise RuntimeError instead of
+    silently returning wrong labels when max_iters is exhausted
+    without convergence."""
     if algorithm == "star":
         return _cc_star(edges, a, b, max_iters)
     if algorithm != "propagation":
@@ -323,42 +337,21 @@ def connected_components(
         .unionByName(edges.select(F.col(b).alias("u"), F.col(a).alias("v")))
         .distinct()
     )
-    labels = _honest_ckpt(
-        und.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-    )
-    for _ in range(max_iters):
-        nbr_min = (
-            und.join(labels, und["v"] == labels["node"])
-            .groupBy(F.col("u").alias("node"))
-            .agg(F.min("component").alias("nbr_component"))
+
+    def step(labels: DataFrame, rnd: int) -> DataFrame:
+        # a node's new label: the min over its own and its neighbors'
+        nbr = und.join(labels, und["v"] == labels["node"]).select(
+            F.col("u").alias("node"), "component"
         )
-        nxt = (
-            labels.join(nbr_min, on="node", how="left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_component", "component")
-                ).alias("component"),
-                (F.coalesce("nbr_component", "component") < F.col("component")).alias(
-                    "_chg"
-                ),
-            )
-        )
-        nxt = _honest_ckpt(nxt)
-        changed = nxt.filter(F.col("_chg")).isEmpty() is False
-        labels = nxt.drop("_chg")
-        if not changed:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components(propagation): labels still changing "
-            f"after max_iters={max_iters} rounds (graph diameter exceeds "
-            "the bound); duplicate groups would be wrong. Raise max_iters "
-            "or use algorithm='star'."
-        )
-    return labels
+        return labels.unionByName(nbr).groupBy("node").agg(F.min("component").alias("component"))
+
+    init = und.select(F.col("u").alias("node")).distinct().withColumn("component", F.col("node"))
+    return _honest_ckpt(_fixpoint(
+        init, step, ("node", "component"), max_iters,
+        f"connected_components(propagation): labels still changing after max_iters={max_iters} "
+        "rounds (graph diameter exceeds the bound); duplicate groups would be wrong. Raise "
+        "max_iters or use algorithm='star'.",
+    ))
 
 
 def _cc_star(edges: DataFrame, a: str, b: str, max_iters: int) -> DataFrame:
@@ -383,36 +376,16 @@ def _cc_star(edges: DataFrame, a: str, b: str, max_iters: int) -> DataFrame:
     with millions of neighbors spills instead of building one giant
     array row.
 
-    Round checkpoints are plain (_ckpt_with_sig honest=False): a
-    join-free round's estimate does not compound, because every row-
-    width change in its plan is undone by a later projection (see the
-    small-star comment), so the rounds carry the honest init
-    checkpoint's estimate (tests/test_stats_honesty.py).
-
-    Convergence test: the (count, bit_xor(xxhash64)) signature of the
-    edge set is compared between rounds — computed by the round's own
-    checkpoint job via Dataset.observe (_ckpt_with_sig), so it costs no
-    extra job and no edge-set diff shuffle (xor is overflow-free and
-    order-independent;
-    edges are distinct so self-cancellation cannot occur). A signature
-    collision on inequal sets is ~2^-64; acceptable for a termination
-    check whose false-positive merely stops one round early on an
-    already-star-shaped graph."""
-    # honest init checkpoint: the caller's edge plan may carry
-    # join-product size estimates (e.g. the LSH verify chain), which a
-    # plain checkpoint would copy — costing round 1 its broadcasts.
-    e, prev_sig = _ckpt_with_sig(
-        edges.select(F.col(a).cast("long").alias("u"), F.col(b).cast("long").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )  # orient large -> small
-        .distinct(),
-        "u",
-        "v",
-    )
+    The rounds run on _fixpoint with reset_every=None: a join-free
+    round's estimate does not compound, because every row-width change
+    in its plan is undone by a later projection (see the small-star
+    comment), so every round checkpoint is plain and the rounds carry
+    the honest init checkpoint's estimate (tests/test_stats_honesty.py).
+    The edge set's signature decides convergence; edges are distinct,
+    so the xor cannot self-cancel."""
     by_u = Window.partitionBy("u")
-    for _ in range(max_iters):
+
+    def step(e: DataFrame, rnd: int) -> DataFrame:
         # -- large-star: symmetrize in one scan, m = min(N(u) + {u}),
         # link every larger neighbor to m (v > u >= m: already large->small)
         sym = e.select(
@@ -434,7 +407,7 @@ def _cc_star(edges: DataFrame, a: str, b: str, max_iters: int) -> DataFrame:
         # one array column BEFORE the explode keeps the plan estimate
         # flat: the Generate copies its child's size, and a child of
         # (u, v, m) would grow it 4/3 per round.
-        small = (
+        return (
             large.select(
                 F.min("v").over(by_u).alias("m"), F.array("u", "v").alias("xs")
             )
@@ -442,15 +415,19 @@ def _cc_star(edges: DataFrame, a: str, b: str, max_iters: int) -> DataFrame:
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        e, sig = _ckpt_with_sig(small, "u", "v", honest=False)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(
-            f"connected_components(star): edge set still changing after "
-            f"max_iters={max_iters} rounds; raise max_iters."
-        )
+
+    init = (
+        edges.select(F.col(a).cast("long").alias("u"), F.col(b).cast("long").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))  # large -> small
+        .distinct()
+    )
+    e = _fixpoint(
+        init, step, ("u", "v"), max_iters,
+        f"connected_components(star): edge set still changing after max_iters={max_iters} "
+        "rounds; raise max_iters.",
+        reset_every=None,
+    )
     # Fixed point is depth-1 stars (child -> component min). Labels:
     # children take their center, centers take themselves.
     return (
@@ -1197,21 +1174,15 @@ def k_core(
     PageRank/triangles/BFS).
 
     Each round is one equi-join (edge restriction) + one hash
-    aggregation (degrees) — the scale-safe shape; the node set only
-    shrinks, so consecutive equal COUNTs certify the fixpoint.
-    localCheckpoint per round keeps lineage flat (the Collapse
-    discipline shared by pagerank/bfs above). Raises on
-    non-convergence rather than returning a wrong subgraph.
-
-    Checkpoint policy (measured on the bench graph, 7 peel rounds):
-    peeling can run tens of rounds (a chain at k=2 peels two nodes a
-    round), and an _honest_ckpt per round costs an extra
-    block-storage pass each time (5.2 s vs 2.4 s hybrid). So rounds
-    use PLAIN localCheckpoint, with an honest reset every 8th round
-    to bound the compounded origin estimate (BigInt stats stay
-    narrow), and the entry/return frames are always honest — the
-    consumer boundary is what the broadcast-loss trap actually needs
-    (tests/test_stats_honesty.py asserts it).
+    aggregation (degrees) — the scale-safe shape. The survivor set only
+    shrinks, so the _fixpoint signature is taken over the node column
+    alone: equal node sets in two consecutive rounds certify the
+    fixpoint, and that round's degrees, counted inside the unchanged
+    node set, ARE the core degrees. Peeling can run tens of rounds (a
+    chain at k=2 peels two nodes a round), which is what _fixpoint's
+    plain round checkpoints with an honest reset every 8th round are
+    for. Raises on non-convergence rather than returning a wrong
+    subgraph; max_iters counts round 0, the unrestricted degree pass.
 
     Returns (node, core_deg): the k-core nodes with their degree
     inside the core.
@@ -1219,55 +1190,21 @@ def k_core(
     edges = _honest_ckpt(
         edges.select(F.col(a).alias("u"), F.col(b).alias("v")).distinct()
     )
-    # No materialized node set up front: every node IS an edge endpoint,
-    # so round 0's edge restriction is a no-op and the initial
-    # distinct+count job is pure overhead. The fixpoint certificate is
-    # consecutive equal survivor counts (the set only shrinks, so equal
-    # counts ⇒ equal sets); an already-k-core graph pays one extra
-    # (identical) round, every other graph runs the same rounds minus
-    # the entry jobs.
-    nodes = None
-    prev = None
-    for i in range(max_iters):
-        ee = (
-            edges
-            if nodes is None
-            else edges.join(
-                nodes.select(F.col("n").alias("u")), "u"
-            ).join(nodes.select(F.col("n").alias("v")), "v")
+
+    def peel(ee: DataFrame) -> DataFrame:
+        ends = ee.select(F.col("u").alias("n")).unionByName(ee.select(F.col("v").alias("n")))
+        return ends.groupBy("n").agg(F.count(F.lit(1)).alias("d")).filter(F.col("d") >= k)
+
+    def step(core: DataFrame, rnd: int) -> DataFrame:
+        return peel(
+            edges.join(core.select(F.col("n").alias("u")), "u")
+            .join(core.select(F.col("n").alias("v")), "v")
         )
-        deg = (
-            ee.select(F.col("u").alias("n"))
-            .unionByName(ee.select(F.col("v").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        # carry (n, d), not just n: at fixpoint this round's edge set
-        # already IS the core (nodes stopped shrinking), so the d >= k
-        # rows ARE (node, core_deg) — returning the converged round's
-        # checkpointed frame skips rebuilding the double join + degree
-        # re-aggregation the r11 version paid at the boundary
-        # Lazy checkpoint fused with the fixpoint count (r14): the
-        # count() is the materializing action, so the round's plan
-        # runs ONCE instead of eager-checkpoint-job + count-job. The
-        # every-8th honest reset stays eager (it must materialize the
-        # cache before capturing stats).
-        if (i + 1) % 8 == 0:
-            nxt = _honest_ckpt(deg.filter(F.col("d") >= k))
-        else:
-            nxt = deg.filter(F.col("d") >= k).localCheckpoint(eager=False)
-        c = nxt.count()
-        nodes = nxt.select("n")
-        if prev is not None and c == prev:
-            # honest-checkpoint the RETURN frame (consumer boundary,
-            # tests/test_stats_honesty.py)
-            return _honest_ckpt(
-                nxt.select(
-                    F.col("n").alias("node"), F.col("d").alias("core_deg")
-                )
-            )
-        prev = c
-    raise RuntimeError(f"k_core: no fixpoint within {max_iters} rounds")
+
+    # Round 0 needs no restriction: every node IS an edge endpoint.
+    core = _fixpoint(peel(edges), step, ("n",), max_iters - 1,
+                     f"k_core: no fixpoint within {max_iters} rounds")
+    return _honest_ckpt(core.select(F.col("n").alias("node"), F.col("d").alias("core_deg")))
 
 
 def sssp(
@@ -1280,41 +1217,23 @@ def sssp(
 ) -> DataFrame:
     """Weighted single-source shortest paths (Bellman-Ford rounds):
     each round relaxes every edge once — one equi-join + one min
-    aggregation — and the (node count, total distance) pair certifies
-    the fixpoint (both are monotone under relaxation). Extends bfs()
-    above to weighted graphs; raises instead of returning partial
-    distances if the bound is hit.
+    aggregation — and _fixpoint stops at the first round that leaves
+    the (node, dist) set unchanged. Extends bfs() above to weighted
+    graphs; raises instead of returning partial distances if the bound
+    is hit.
 
     Returns (node, dist) with exact integer distances.
     """
-    spark = edges.sparkSession
-    dist = local_frame(spark, [(source, 0)], "node long, dist long")
-    prev = (1, 0)
-    for i in range(max_iters):
-        cand = (
-            dist.join(edges, dist["node"] == edges[src])
-            .select(F.col(dst).alias("node"), (F.col("dist") + F.col(w)).alias("dist"))
+
+    def step(dist: DataFrame, rnd: int) -> DataFrame:
+        cand = dist.join(edges, dist["node"] == edges[src]).select(
+            F.col(dst).alias("node"), (F.col("dist") + F.col(w)).alias("dist")
         )
-        # lazy checkpoint + fixpoint aggregate in ONE job (see k_core)
-        merged = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-        merged = (
-            _honest_ckpt(merged)
-            if (i + 1) % 8 == 0
-            else merged.localCheckpoint(eager=False)
-        )
-        row = merged.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dist").alias("t")
-        ).collect()[0]
-        cur = (row["n"], row["t"])
-        dist = merged
-        if cur == prev:
-            return _honest_ckpt(dist)
-        prev = cur
-    raise RuntimeError(f"sssp: no fixpoint within {max_iters} rounds")
+        return dist.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    init = local_frame(edges.sparkSession, [(source, 0)], "node long, dist long")
+    return _honest_ckpt(_fixpoint(init, step, ("node", "dist"), max_iters,
+                                  f"sssp: no fixpoint within {max_iters} rounds"))
 
 
 def label_propagation(
@@ -1732,18 +1651,19 @@ def _min_label_fixpoint(
     label crosses distance 2^r paths after r rounds — O(log diameter)
     rounds instead of O(diameter) (the one-edge-per-round version
     silently truncates on long rings). nodes: (node); edges: (u, v)
-    meaning u's label flows to v. Returns (node, c) = min id with a
-    path to node. Rounds checkpoint via _loop_ckpt: plain
-    localCheckpoint compounds sizeInBytes estimates ~3x/round and by
-    round ~16-20 InjectRuntimeFilter's canBroadcastBySize spends the
-    whole round multiplying astronomically wide BigInts (observed:
-    0.4s rounds doubling to minutes; jstack pinned BigInteger.multiply
-    under SizeInBytesOnlyStatsPlanVisitor; an earlier revision bounced
-    through parquet every 6 rounds to work around it) — the periodic
-    honest reset bounds the estimate at the cause, and the returned
-    color table is always _honest_ckpt for consumers."""
-    color = nodes.select("node", F.col("node").alias("c")).localCheckpoint()
-    for _round in range(max_rounds):
+    meaning u's label flows to v, both ends in nodes. Returns (node, c)
+    = min id with a path to node.
+
+    The rounds run on _fixpoint, whose honest reset every 8th round
+    matters here: plain localCheckpoint compounds sizeInBytes estimates
+    ~3x/round and by round ~16-20 InjectRuntimeFilter's
+    canBroadcastBySize spends the whole round multiplying
+    astronomically wide BigInts (observed: 0.4s rounds doubling to
+    minutes; jstack pinned BigInteger.multiply under
+    SizeInBytesOnlyStatsPlanVisitor). The returned color table is
+    always _honest_ckpt for consumers."""
+
+    def step(color: DataFrame, rnd: int) -> DataFrame:
         # One propagation join over (graph edges ∪ label edges): the
         # label edge c(v) -> v delivers c(c(v)) to v — the pointer-
         # doubling hop — in the same shuffle as the one-edge hop,
@@ -1754,24 +1674,11 @@ def _min_label_fixpoint(
         via = color.join(ed, color["node"] == ed["u"]).select(
             F.col("v").alias("node"), F.col("c")
         )
-        # Carry the previous label through the aggregation so the
-        # changed flag materializes inside the SAME checkpoint job;
-        # the stability probe is then a plain scan of the checkpointed
-        # rows instead of a second shuffle join per round.
-        nxt_full = _loop_ckpt(
-            color.select("node", F.col("c").alias("_co"))
-            .join(
-                color.unionByName(via).groupBy("node").agg(F.min("c").alias("c")),
-                "node",
-            )
-            .withColumn("_chg", F.col("c") != F.col("_co")),
-            _round,
-        )
-        stable = nxt_full.filter(F.col("_chg")).limit(1).isEmpty()
-        color = nxt_full.select("node", "c")
-        if stable:
-            return _honest_ckpt(color)
-    raise RuntimeError("min-label propagation did not converge")
+        return color.unionByName(via).groupBy("node").agg(F.min("c").alias("c"))
+
+    init = nodes.select("node", F.col("node").alias("c"))
+    return _honest_ckpt(_fixpoint(init, step, ("node", "c"), max_rounds,
+                                  "min-label propagation did not converge"))
 
 
 def strongly_connected_components(
